@@ -1,39 +1,44 @@
 """Crawl benchmark for ``CrawlEngine``.
 
-    python3 perfbench/run.py --workload drain --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload drain --seed 1 --seconds 30 --trace 0
 
 Each run is one fresh driver process at ``local[nproc]``: it starts the
-JVM, builds a ``CrawlEngine`` over a fixture written from the seed, crawls,
-checks the output against ``plans/simulator.py`` and prints one JSON line
-last on stdout.  ``--trace 0`` reports the end-to-end metrics, ``--trace 1``
-the per-layer metrics from a separate traced run (Spark event log on,
-per-seed fetch order collected, standalone layer probes).
+JVM, builds a ``CrawlEngine`` over a fixture written from the seed, crawls
+once, checks the output against ``plans/simulator.py`` and prints one JSON
+line last on stdout.  ``--trace 0`` reports the end-to-end metrics,
+``--trace 1`` the per-layer metrics from a separate traced run (Spark event
+log on, per-seed fetch order collected, checkpoint and recovery, standalone
+layer probes).
 
-Load model: a closed-loop batch job, like the reference's cron run.  One
-unit of work (a whole drain, a politeness-bounded window of waves, or a
-crawl that crashes and resumes) runs, then the next starts, until
-``--seconds`` have passed; at least one unit always runs.  JVM start and the
-cold first wave are counted, because every cron run pays them.
+Load model: a closed-loop batch job, like the reference's cron run.  A run
+is one whole crawl (``drain``) or window of waves (``polite``), whatever
+``--seconds`` says: repeating it would add a JVM start and more waves of
+the same kind per unit, and one crawl already measures 30-45 s on a
+4-core host.  JVM start and the cold first wave are counted, because every
+cron run pays them.
 
 Workloads (every seed samples a fixed number of seed rows per portal from
 the ``sf0.01`` synthetic tier, so seeds differ in content, not in size):
 
-* ``drain`` -- 50 seeds per portal, politeness-unbounded waves: the per-URL
-  parse, pipeline and seen work is largest here.
+* ``drain`` -- 420 of the 450 seeds of each large portal (all of the two
+  smaller ones), politeness-unbounded waves: the per-URL parse, pipeline
+  and seen work is largest here.
 * ``polite`` -- 4 seeds per portal at the reference's politeness budget
   (10 s crawl delay, 1 request per netloc, 30 s waves): about 3 URLs per
   netloc per wave, so the fixed per-wave cost does nearly all the work.
-  The crawl would take ~100 waves to drain; a run measures the first 12
-  and checks that every seed's output is a prefix of the simulator's.
-* ``resume`` -- 20 seeds per portal with the cuckoo seen filter, a
-  checkpoint after every wave, a crash after wave 4, and recovery in a
-  fresh engine that drains the rest.
+  The crawl would take ~100 waves to drain; a run measures the first 10.
+  Its expected output is the simulator's items for the URLs the engine
+  fetched in the window, and those URLs must be a prefix of each seed's
+  simulated fetch order.
 
-Every workload ends the same way: checkpoint, ``resume_from`` in a fresh
-engine (``resume_s``, the median of three), ``purge_seen`` of a seeded 10%
-of the seen URLs, and a check that the recovered, purged seen set is the
-simulator's minus the purged URLs.  A correctness mismatch or counts that differ from an earlier
-run of the same seed on the same code make the run exit 1.
+The golden output is the simulator's crawl of every seed of the base tier,
+computed once per package source digest (in ``nproc`` processes; seeds
+are independent) and cached; a run takes the seeds it sampled.  Item text
+per seed and URL, and the final seen set, must equal the simulator's; the
+traced run also checks per-seed fetch order and the seen set after a
+checkpoint, a recovery in a fresh engine and a purge of 10% of it.  A
+mismatch, or counts that differ from an earlier run of the same seed on
+the same code, make the run exit 1.
 
 Run records (host fingerprint, per-wave table, spans, event-log totals) go
 to ``.perfbench/out/`` in the checkout; the benchmark reads and writes
@@ -45,7 +50,9 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import multiprocessing
 import os
+import pickle
 import platform
 import random
 import shutil
@@ -63,25 +70,21 @@ BASE_TIER = "sf0.01"
 HOUR = 7
 
 WORKLOADS = {
-    "drain": {"per_portal": 50, "engine": {}, "max_waves": None,
-              "crash_after": None},
+    "drain": {"per_portal": 420, "engine": {}, "max_waves": None},
     "polite": {"per_portal": 4, "engine": {"iter_seconds": 30.0},
-               "max_waves": 12, "crash_after": None},
-    "resume": {"per_portal": 20, "engine": {"seen_filter": "cuckoo"},
-               "max_waves": None, "crash_after": 4},
+               "max_waves": 10},
 }
 PURGE_FRAC = 0.10
-RECOVERIES = 3  # resume_s is the median of this many recoveries
+RECOVERIES = 3  # traced: crawl.resume_from_s is the median of this many
 PROBE_UNSEEN = 20_000  # unseen URLs per sketch false-positive probe
+KERNEL_SEEDS = 200  # traced: seeds in the single-process simulate probe
 
 END_TO_END = {"setup_s": "s", "urls_per_s": "1/s", "wave_p50_s": "s"}
-# reported in the run record and on stderr, but not gated: their spread
-# across runs of one commit is wider than any bound the benchmark may set
-# (no run has enough waves for a tail percentile, resident memory follows
-# the JVM's heap sizing, and a recovery is a handful of sub-second jobs),
-# and the two fractions are zero on every correct run
+# reported in the run record and on stderr, but not gated: no run has
+# enough waves for a tail percentile, resident memory follows the JVM's
+# heap sizing, and the two fractions are zero on every correct run
 REPORTED = {
-    "wave_tail_s": "s", "resume_s": "s", "peak_rss_mb": "MB",
+    "wave_tail_s": "s", "peak_rss_mb": "MB",
     "item_mismatch_frac": "frac", "op_fail_frac": "frac",
 }
 PER_LAYER = {
@@ -156,7 +159,7 @@ def host_ram_bytes() -> int:
 
 def driver_heap() -> str:
     """A quarter of host RAM, between 1 and 8 GiB: the JVM shares the host
-    with the Python workers and the golden simulator."""
+    with the Python workers and the benchmark's own process."""
     mb = host_ram_bytes() // 4 // (1 << 20)
     return f"{max(1024, min(8192, mb))}m"
 
@@ -215,6 +218,28 @@ def git_commit():
 
 
 # ------------------------------------------------------------- fixture
+def read_seeds(base: str) -> list:
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(os.path.join(base, "seeds.parquet")).to_pylist()
+    return sorted(rows, key=lambda r: r["seed_id"])
+
+
+def read_pages(base: str) -> dict:
+    import pyarrow.parquet as pq
+
+    pages = pq.read_table(os.path.join(base, "pages.parquet"),
+                          columns=["url", "text"])
+    return dict(zip(pages.column("url").to_pylist(),
+                    pages.column("text").to_pylist()))
+
+
+def read_stadte(base: str) -> list:
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(base, "stadte.parquet")).to_pylist()
+
+
 def write_fixture(base: str, workload: str, seed: int) -> tuple:
     """Sample ``per_portal`` seed rows per portal from the base tier and
     write a fixture directory holding that sample; pages, cities and
@@ -223,9 +248,9 @@ def write_fixture(base: str, workload: str, seed: int) -> tuple:
     import pyarrow.parquet as pq
 
     spec = WORKLOADS[workload]
-    table = pq.read_table(os.path.join(base, "seeds.parquet"))
+    schema = pq.read_schema(os.path.join(base, "seeds.parquet"))
     by_portal: dict = {}
-    for row in sorted(table.to_pylist(), key=lambda r: r["seed_id"]):
+    for row in read_seeds(base):
         by_portal.setdefault(row["portal"], []).append(row)
     rng = random.Random(f"perfbench|{workload}|{seed}")
     sample = sorted(
@@ -236,7 +261,7 @@ def write_fixture(base: str, workload: str, seed: int) -> tuple:
     fix = os.path.join(WORK, "fix", f"{workload}-{seed}")
     shutil.rmtree(fix, ignore_errors=True)
     os.makedirs(fix)
-    pq.write_table(pa.Table.from_pylist(sample, schema=table.schema),
+    pq.write_table(pa.Table.from_pylist(sample, schema=schema),
                    os.path.join(fix, "seeds.parquet"))
     for name in ("pages", "stadte", "robots"):
         shutil.copyfile(os.path.join(base, f"{name}.parquet"),
@@ -244,24 +269,70 @@ def write_fixture(base: str, workload: str, seed: int) -> tuple:
     return fix, sample
 
 
-def golden(fix: str, sample: list):
-    """The simulator's crawl of the sample; its wall per fetched URL is the
-    single-threaded kernel baseline."""
-    import pyarrow.parquet as pq
+# -------------------------------------------------------------- golden
+_SIM_INPUT: tuple = ()  # (pages, stadte), set before the pool forks
 
+
+def simulate_seeds(seeds, pages, stadte) -> dict:
+    """seed -> ([(url, kind)] fetched, [(url, item_json, seen_url)]) in the
+    simulator's order.  Fixture URLs are disjoint across seeds, so seeds
+    simulate independently."""
     from scrapy_crawler_german_real_estate_sites_spark.plans.simulator import (
+        canonical_item_text,
         simulate,
     )
 
-    pages = pq.read_table(os.path.join(fix, "pages.parquet"),
-                          columns=["url", "text"])
-    pages_map = dict(zip(pages.column("url").to_pylist(),
-                         pages.column("text").to_pylist()))
-    stadte = pq.read_table(os.path.join(fix, "stadte.parquet")).to_pylist()
-    t0 = time.time()
-    sim = simulate(pages_map, sample, stadte, hour=HOUR)
-    wall = time.time() - t0
-    return sim, wall, pages_map, stadte
+    sim = simulate(pages, seeds, stadte, hour=HOUR)
+    out: dict = {s["seed_id"]: ([], []) for s in seeds}
+    for seed_id, _seq, url, kind in sim.fetch_order:
+        out[seed_id][0].append((url, kind))
+    for (seed_id, url, item, _k), eff in zip(sim.items, sim.effects):
+        out[seed_id][1].append((url, canonical_item_text(item), eff[1]))
+    return out
+
+
+def _simulate_chunk(seeds) -> dict:
+    return simulate_seeds(seeds, *_SIM_INPUT)
+
+
+class FetchBudget:
+    """A pages mapping that serves a seed's first ``n`` fetches and then
+    answers like a missing page, so the simulator stops where a window of
+    waves stopped."""
+
+    def __init__(self, pages, n):
+        self.pages, self.left = pages, n
+
+    def get(self, url):
+        body = self.pages.get(url) if self.left else None
+        self.left -= body is not None
+        return body
+
+
+def golden(base: str, digest: str, cores: int) -> dict:
+    """The simulator's crawl of every seed of the base tier, cached per
+    package source digest."""
+    global _SIM_INPUT
+    path = os.path.join(WORK, "golden", f"{BASE_TIER}-h{HOUR}-{digest}.pkl")
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            return pickle.load(f)
+    seeds = read_seeds(base)
+    _SIM_INPUT = (read_pages(base), read_stadte(base))
+    chunks = [seeds[i:i + 50] for i in range(0, len(seeds), 50)]
+    pool = multiprocessing.get_context("fork").Pool(cores)
+    try:
+        parts = pool.map(_simulate_chunk, chunks)
+    finally:
+        pool.close()
+        pool.join()
+    _SIM_INPUT = ()
+    gold = {k: v for part in parts for k, v in part.items()}
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".tmp", "wb") as f:
+        pickle.dump(gold, f, protocol=pickle.HIGHEST_PROTOCOL)
+    os.replace(path + ".tmp", path)
+    return gold
 
 
 # ---------------------------------------------------------------- crawl
@@ -269,26 +340,24 @@ class Crawl:
     """One benchmark run: a Spark session, the engines built on it, and
     what the run measured."""
 
-    def __init__(self, args, fix, tracer):
+    def __init__(self, args, fix, tracer, collect_batches=False):
         self.args = args
         self.spec = WORKLOADS[args.workload]
         self.fix = fix
         self.tr = tracer
+        self.collect_batches = collect_batches
         self.waves: list = []  # one record per non-empty wave
-        self.units: list = []  # per unit: counts
-        self.items: list = []  # per unit: (seed_id, fifo_seq, idx, url, json)
-        self.fetch_order: list = []  # traced, first unit
-        self.batches: list = []  # traced, first unit: fetched batch rows
+        self.batches: list = []  # fetched batch rows, when collected
         self.pending_snap = None  # traced: mid-crawl frontier and state
-        self.crawl_wall = 0.0  # wave 1 to drained, summed over units
-        self.excluded = 0.0  # traced-only collection time inside it
+        self.crawl_wall = 0.0  # wave 1 to drained
+        self.excluded = 0.0  # batch and frontier collection inside it
         self.stage_seen: set = set()
         self.ckpt_dir = os.path.join(WORK, "ckpt",
                                      f"{args.workload}-{args.seed}")
         shutil.rmtree(self.ckpt_dir, ignore_errors=True)
 
     # -- session ------------------------------------------------------
-    def start(self, eventlog_dir):
+    def start(self, eventlog_dir=None):
         from scrapy_crawler_german_real_estate_sites_spark.sources.tables import (
             get_spark,
         )
@@ -345,11 +414,10 @@ class Crawl:
 
     def wave(self, eng) -> bool:
         """Run one wave; False once the frontier is empty."""
-        traced = self.args.trace and not self.units
         label = f"wave{len(self.waves)}"
-        if traced:
+        if self.collect_batches:
             t0 = time.time()
-            self.sc.setJobGroup("trace.batch", "fetched batch for probes")
+            self.sc.setJobGroup("batch", "fetched batch")
             self.batches += rows(eng.tagged.where("sel").select(
                 "seed_id", "fifo_seq", "url", "kind", "netloc", "meta"))
             self.excluded += time.time() - t0
@@ -359,9 +427,8 @@ class Crawl:
         jobs, failed, stages, tasks = self._job_counts(label)
         if not m.get("selected"):
             return False
-        rec = {"unit": len(self.units), "wave": label, "wall": sp["dur"],
-               "jobs": jobs, "jobs_failed": failed, "stages": stages,
-               "tasks": tasks}
+        rec = {"wave": label, "wall": sp["dur"], "jobs": jobs,
+               "jobs_failed": failed, "stages": stages, "tasks": tasks}
         rec.update({k: m[k] for k in (
             "selected", "fetched", "items", "new_links", "dups_filtered",
             "robots_blocked", "inserted")})
@@ -388,6 +455,18 @@ class Crawl:
                 tasks += si.numTasks
         return len(jobs), failed, stages, tasks
 
+    def crawl(self, eng):
+        """Drain the frontier, or run the workload's window of waves."""
+        max_waves = self.spec["max_waves"]
+        snap_at = (max_waves or 8) // 2  # a drain has 8 or 9 waves
+        t0 = time.time()
+        while max_waves is None or len(self.waves) < max_waves:
+            if not self.wave(eng):
+                break
+            if self.args.trace and len(self.waves) == snap_at:
+                self.snapshot_pending(eng)
+        self.crawl_wall = time.time() - t0
+
     def snapshot_pending(self, eng):
         """Keep the mid-crawl frontier and seed state for the standalone
         ``tag_batch`` probe."""
@@ -398,14 +477,15 @@ class Crawl:
                              eng.iteration, eng.iter_seconds, eng.token_scale)
         self.excluded += time.time() - t0
 
-    def collect_items(self, eng):
+    def items(self, eng) -> list:
         self.sc.setJobGroup("items", "items_df")
         with self.tr.span("crawl.items_df"):
-            got = rows(eng.items_df().select(
+            return rows(eng.items_df().select(
                 "seed_id", "fifo_seq", "item_idx", "url", "item_json"))
-        self.items[-1] += got
-        if self.args.trace and len(self.units) == 0:
-            self.fetch_order += eng.fetch_order()
+
+    def seen(self, eng) -> set:
+        self.sc.setJobGroup("seen", "seen set")
+        return {r.url for r in eng.seen.select("url").collect()}
 
     def checkpoint(self, eng) -> str:
         self.sc.setJobGroup("checkpoint", "checkpoint")
@@ -420,43 +500,6 @@ class Crawl:
             eng.resume_from(ckpt)
         return eng
 
-    def purge(self, eng, urls):
-        dead = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        self.sc.setJobGroup("purge", "purge_seen")
-        with self.tr.span("crawl.purge_seen"):
-            eng.purge_seen(dead)
-        return {r.url for r in eng.seen.select("url").collect()}
-
-    # -- units --------------------------------------------------------
-    def unit(self, eng):
-        """One unit of work, its items collected; returns the engine that
-        holds the final state."""
-        max_waves = self.spec["max_waves"]
-        crash_after = self.spec["crash_after"]
-        snap_at = crash_after or (max_waves or 8) // 2  # a drain has 8 waves
-        first = len(self.waves)
-        self.items.append([])
-        t0 = time.time()
-        while max_waves is None or len(self.waves) - first < max_waves:
-            if not self.wave(eng):
-                break
-            done = len(self.waves) - first
-            if self.args.trace and self.pending_snap is None \
-                    and done == snap_at:
-                self.snapshot_pending(eng)
-            if crash_after:
-                ckpt = self.checkpoint(eng)
-                if done == crash_after:
-                    self.collect_items(eng)  # what the crashed run emitted
-                    eng.close()
-                    eng = self.recover(ckpt)
-        self.crawl_wall += time.time() - t0
-        self.collect_items(eng)
-        ws = self.waves[first:]
-        self.units.append({k: (len(ws) if k == "waves" else
-                               sum(w[k] for w in ws)) for k in COUNT_KEYS})
-        return eng
-
     def recovered(self, eng):
         """Checkpoint the final state and recover it ``RECOVERIES`` times,
         each in a fresh engine; returns the last recovered engine."""
@@ -466,30 +509,42 @@ class Crawl:
             self.recover(ckpt).close()
         return self.recover(ckpt)
 
+    def purge(self, eng, urls):
+        dead = self.spark.createDataFrame([(u,) for u in urls], "url string")
+        self.sc.setJobGroup("purge", "purge_seen")
+        with self.tr.span("crawl.purge_seen"):
+            eng.purge_seen(dead)
+
 
 def rows(df) -> list:
     return [tuple(r) for r in df.collect()]
 
 
 # ----------------------------------------------------------- correctness
-def per_seed_sim(sim) -> dict:
-    """seed -> [(url, item_json, seen_url)] in the simulator's order."""
-    from scrapy_crawler_german_real_estate_sites_spark.plans.simulator import (
-        canonical_item_text,
-    )
+def window_expectation(batches, gold, sample, pages, stadte) -> tuple:
+    """What a window of waves must have emitted: per seed, the simulator's
+    items when it may fetch only as many pages as the engine fetched.  The
+    engine's fetched pages, in FIFO order, must be the start of the seed's
+    simulated fetch order; returns (expected, seeds where they are not)."""
+    fetched: dict = {}
+    for seed_id, _fifo, url, *_ in sorted(batches, key=lambda r: r[:2]):
+        if url in pages:  # a URL without a page is never fetched
+            fetched.setdefault(seed_id, []).append(url)
+    exp: dict = {}
+    off = 0
+    for s in sample:
+        got = fetched.get(s["seed_id"], [])
+        order = [u for u, _k in gold[s["seed_id"]][0]]
+        off += got != order[:len(got)]
+        exp[s["seed_id"]] = simulate_seeds(
+            [s], FetchBudget(pages, len(got)), stadte)[s["seed_id"]][1]
+    return exp, off
 
-    out: dict = {}
-    for (seed_id, url, item, _k), eff in zip(sim.items, sim.effects):
-        out.setdefault(seed_id, []).append(
-            (url, canonical_item_text(item), eff[1]))
-    return out
 
-
-def check_items(items, exp, prefix: bool):
-    """Item text per seed and URL must equal the simulator's; a window
-    (``prefix``) must equal the start of every seed's expected list.
-    Returns (mismatching or missing items, items expected, the seen URLs
-    the expected items insert)."""
+def check_items(items, exp) -> tuple:
+    """Item text per seed and URL must equal the expected list.  Returns
+    (mismatching or missing items, items expected, the seen URLs the
+    expected items insert)."""
     got: dict = {}
     for seed_id, _fifo, _idx, url, js in sorted(items):
         got.setdefault(seed_id, []).append((url, js))
@@ -497,8 +552,6 @@ def check_items(items, exp, prefix: bool):
     seen = set()
     for sid in set(exp) | set(got):
         e, g = exp.get(sid, []), got.get(sid, [])
-        if prefix:
-            e = e[:len(g)]
         expected += len(e)
         mismatches += sum(1 for i in range(max(len(e), len(g)))
                           if i >= len(e) or i >= len(g) or g[i] != e[i][:2])
@@ -506,25 +559,24 @@ def check_items(items, exp, prefix: bool):
     return mismatches, expected, seen
 
 
-def check_order(fetch_order, sim, prefix: bool) -> int:
-    """Seeds whose fetch order differs from the simulator's."""
-    exp: dict = {}
-    for seed_id, _seq, url, kind in sim.fetch_order:
-        exp.setdefault(seed_id, []).append((url, kind))
+def check_order(fetch_order, gold, sample, window: bool) -> int:
+    """Seeds whose fetch order differs from the simulator's (from the start
+    of it, for a window)."""
     got: dict = {}
     for seed_id, _fifo, url, kind in sorted(fetch_order,
                                             key=lambda r: (r[0], r[1])):
         got.setdefault(seed_id, []).append((url, kind))
-    return sum(1 for sid in set(exp) | set(got)
-               if got.get(sid, []) != (exp.get(sid, [])[:len(got.get(sid, []))]
-                                       if prefix else exp.get(sid, [])))
+    bad = 0
+    for s in sample:
+        exp = gold[s["seed_id"]][0]
+        g = got.pop(s["seed_id"], [])
+        bad += g != (exp[:len(g)] if window else exp)
+    return bad + len(got)
 
 
-def check_counts(workload, seed, digest, units) -> list:
-    """Counts must repeat across units of this run and across runs of the
-    same seed on the same code and workload definition."""
-    problems = [f"unit {i} counts {u} != unit 0 {units[0]}"
-                for i, u in enumerate(units) if u != units[0]]
+def check_counts(workload, seed, digest, counts) -> list:
+    """Counts must repeat across runs of the same seed on the same code and
+    workload definition."""
     spec = hashlib.sha256(json.dumps(WORKLOADS[workload], sort_keys=True)
                           .encode()).hexdigest()[:8]
     path = os.path.join(WORK, "counts",
@@ -532,16 +584,26 @@ def check_counts(workload, seed, digest, units) -> list:
     if os.path.exists(path):
         with open(path) as f:
             prev = json.load(f)
-        if prev != units[0]:
-            problems.append(f"counts {units[0]} != earlier run {prev}")
-    else:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(units[0], f)
-    return problems
+        return [] if prev == counts else [
+            f"counts {counts} != earlier run {prev}"]
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        json.dump(counts, f)
+    return []
 
 
 # ---------------------------------------------------------------- probes
+def probe_kernel(crawl, sample, pages, stadte, seed) -> float:
+    """Single-process ``simulate`` over a seeded subset of the run's seeds:
+    microseconds per fetched URL."""
+    rng = random.Random(f"perfbench|kernel|{seed}")
+    seeds = sorted(rng.sample(sample, min(KERNEL_SEEDS, len(sample))),
+                   key=lambda r: r["seed_id"])
+    with crawl.tr.span("probe.simulate") as sp:
+        out = simulate_seeds(seeds, pages, stadte)
+    return sp["dur"] / sum(len(v[0]) for v in out.values()) * 1e6
+
+
 def probe_parse(crawl, sample, stadte):
     """``parse_pages`` over the run's fetched pages, with the seed-context
     broadcast in the layout its docstring gives."""
@@ -613,7 +675,7 @@ def probe_tag(crawl):
     return n_in, int(sel or 0)
 
 
-def probe_seen(crawl, seen_urls, pages_map, seed):
+def probe_seen(crawl, seen_urls, pages, seed):
     """Bloom and cuckoo build, flag and delete on the final seen set; the
     false-positive rate is measured against exact membership on a seeded
     set of page URLs the crawl never inserted.  A flagged-unseen URL is a
@@ -632,7 +694,7 @@ def probe_seen(crawl, seen_urls, pages_map, seed):
     spark, sc, tr = crawl.spark, crawl.sc, crawl.tr
     seen = sorted(seen_urls)
     rng = random.Random(f"perfbench|unseen|{seed}")
-    pool = sorted(u for u in pages_map if u not in seen_urls)
+    pool = sorted(u for u in pages if u not in seen_urls)
     unseen = rng.sample(pool, min(PROBE_UNSEEN, len(pool)))
     sc.setJobGroup("probe.seen_input", "sketch probe input")
     seen_df = spark.createDataFrame([(u,) for u in seen], "url string").cache()
@@ -696,12 +758,11 @@ def measure(args, tr, record) -> tuple:
     from scrapy_crawler_german_real_estate_sites_spark.sources import synth
 
     digest = record["host"]["source_digest"]
+    window = WORKLOADS[args.workload]["max_waves"] is not None
     # the benchmark's own work, outside every metric: inputs and golden
     base = synth.generate(BASE_TIER, os.path.join(WORK, "base", BASE_TIER))
+    gold = golden(base, digest, args.cores)
     fix, sample = write_fixture(base, args.workload, args.seed)
-    sim, sim_wall, pages_map, stadte = golden(fix, sample)
-    exp = per_seed_sim(sim)
-    prefix = WORKLOADS[args.workload]["max_waves"] is not None
     record["seeds"] = len(sample)
 
     evdir = None
@@ -709,72 +770,81 @@ def measure(args, tr, record) -> tuple:
         evdir = os.path.join(WORK, "out", f"eventlog-{record['run_id']}")
         shutil.rmtree(evdir, ignore_errors=True)
         os.makedirs(evdir)
-    crawl = Crawl(args, fix, tr)
+    crawl = Crawl(args, fix, tr, collect_batches=bool(args.trace) or window)
     problems: list = []
     try:
+        record["phase_s"] = {"inputs": time.time() - T_START}
         crawl.start(evdir)
         record["host"]["java"] = crawl.sc._jvm.System.getProperty(
             "java.version")
         eng = crawl.new_engine()
-        setup_s = record["import_s"] + tr.durations("tables.get_spark")[0] \
-            + tr.durations("crawl.init")[0]
-        t_run = time.time()
-        while True:
-            eng = crawl.unit(eng)
-            if time.time() - t_run >= args.seconds:
-                break
-            eng.close()
-            eng = crawl.new_engine()
+        setup_s = (record["import_s"] + tr.durations("tables.get_spark")[0]
+                   + tr.durations("crawl.init")[0])
+        record["phase_s"]["setup"] = time.time() - T_START
+        crawl.crawl(eng)
+        record["phase_s"]["crawl"] = time.time() - T_START
+        items = crawl.items(eng)
 
-        mismatches = expected = 0
-        for items in crawl.items:  # every unit repeats the same crawl
-            mm, ex, exp_seen = check_items(items, exp, prefix)
-            mismatches += mm
-            expected += ex
+        pages, stadte = read_pages(base), read_stadte(base)
+        if window:
+            exp, off = window_expectation(crawl.batches, gold, sample,
+                                          pages, stadte)
+            if off:
+                problems.append(f"{off} seeds fetched other pages than the "
+                                "start of their simulated fetch order")
+        else:
+            exp = {s["seed_id"]: gold[s["seed_id"]][1] for s in sample}
+        mismatches, expected, exp_seen = check_items(items, exp)
         record["item_mismatch_frac"] = mismatches / max(1, expected)
         if mismatches:
             problems.append(f"{mismatches} of {expected} items differ")
-        if args.trace:
-            bad = check_order(crawl.fetch_order, sim, prefix)
-            if bad:
-                problems.append(f"fetch order differs for {bad} seeds")
-
-        eng = crawl.recovered(eng)
-        rng = random.Random(f"perfbench|purge|{args.seed}")
-        purged = set(rng.sample(sorted(exp_seen),
-                                int(len(exp_seen) * PURGE_FRAC)))
-        seen = crawl.purge(eng, sorted(purged))
-        eng.close()
-        if seen != exp_seen - purged:
-            problems.append(
-                f"seen set after purge: {len(seen - exp_seen)} extra, "
-                f"{len(exp_seen - purged - seen)} missing")
-        problems += check_counts(args.workload, args.seed, digest,
-                                 crawl.units)
+        seen = crawl.seen(eng)
+        if seen != exp_seen:
+            problems.append(f"seen set: {len(seen - exp_seen)} extra, "
+                            f"{len(exp_seen - seen)} missing")
+        counts = {k: (len(crawl.waves) if k == "waves" else
+                      sum(w[k] for w in crawl.waves)) for k in COUNT_KEYS}
+        problems += check_counts(args.workload, args.seed, digest, counts)
 
         walls = [w["wall"] for w in crawl.waves]
         record["wave_tail_s"], record["wave_tail"] = tail(walls)
-        record["peak_rss_mb"] = (vm_hwm_kb("self")
-                                 + vm_hwm_kb(crawl.jvm_pid)) / 1024
-        record["resume_samples"] = tr.durations("crawl.resume_from")
-        record["resume_s"] = statistics.median(record["resume_samples"])
         e2e = {
             "setup_s": setup_s,
-            "urls_per_s": sum(w["fetched"] for w in crawl.waves)
+            "urls_per_s": counts["fetched"]
             / (crawl.crawl_wall - crawl.excluded),
             "wave_p50_s": statistics.median(walls),
         }
         if args.trace:
+            bad = check_order(eng.fetch_order(), gold, sample, window)
+            if bad:
+                problems.append(f"fetch order differs for {bad} seeds")
+            eng = crawl.recovered(eng)
+            rng = random.Random(f"perfbench|purge|{args.seed}")
+            purged = set(rng.sample(sorted(exp_seen),
+                                    int(len(exp_seen) * PURGE_FRAC)))
+            crawl.purge(eng, sorted(purged))
+            after = crawl.seen(eng)
+            if after != exp_seen - purged:
+                problems.append(
+                    f"seen set after recovery and purge: "
+                    f"{len(after - exp_seen)} extra, "
+                    f"{len(exp_seen - purged - after)} missing")
+            kernel_us = probe_kernel(crawl, sample, pages, stadte, args.seed)
             n_pages = probe_parse(crawl, sample, stadte)
             n_in, n_sel = probe_tag(crawl)
-            sketch, errors = probe_seen(crawl, seen, pages_map, args.seed)
+            sketch, errors = probe_seen(crawl, after, pages, args.seed)
             problems += errors
+        record["phase_s"]["checks"] = time.time() - T_START
+        eng.close()
+        record["peak_rss_mb"] = (vm_hwm_kb("self")
+                                 + vm_hwm_kb(crawl.jvm_pid)) / 1024
     finally:
         if hasattr(crawl, "spark"):
             crawl.stop()
         shutil.rmtree(fix, ignore_errors=True)
         shutil.rmtree(crawl.ckpt_dir, ignore_errors=True)
-    record["units"] = crawl.units
+    record["phase_s"]["stopped"] = time.time() - T_START
+    record["counts"] = counts
     record["waves"] = crawl.waves
     if not args.trace:
         return e2e, {}, problems
@@ -783,44 +853,42 @@ def measure(args, tr, record) -> tuple:
 
     groups = fold(os.path.join(evdir, os.listdir(evdir)[0]))
     record["eventlog_groups"] = groups
-    nw = len(crawl.waves)
+    waves = crawl.waves
+    nw = len(waves)
 
     def wave_total(key):
-        return sum(groups.get(w["wave"], {}).get(key, 0)
-                   for w in crawl.waves)
+        return sum(groups.get(w["wave"], {}).get(key, 0) for w in waves)
 
-    first = crawl.waves[:crawl.units[0]["waves"]]
-    n_links = sum(w["new_links"] for w in first)
-    n_dups = sum(w["dups_filtered"] for w in first)
-    kernel_us = sim_wall / len(sim.fetch_order) * 1e6
+    n_links = sum(w["new_links"] for w in waves)
+    n_dups = sum(w["dups_filtered"] for w in waves)
     parse_us = groups["probe.parse"]["task_s"] / n_pages * 1e6
     per_layer = {
         "tables.get_spark_s": tr.durations("tables.get_spark")[0],
-        "tables.checkpoint_s": statistics.median(
-            tr.durations("tables.checkpoint")),
+        "tables.checkpoint_s": tr.durations("tables.checkpoint")[0],
         "crawl.init_s": tr.durations("crawl.init")[0],
         # medians: a wave now and then issues one job more than the same
         # wave of another run of the same seed; the run record keeps them all
-        "crawl.jobs_per_wave": statistics.median(w["jobs"] for w in first),
+        "crawl.jobs_per_wave": statistics.median(w["jobs"] for w in waves),
         "crawl.stages_per_wave": statistics.median(w["stages"]
-                                                   for w in first),
-        "crawl.tasks_per_wave": statistics.median(w["tasks"] for w in first),
+                                                   for w in waves),
+        "crawl.tasks_per_wave": statistics.median(w["tasks"] for w in waves),
         "crawl.exec_busy_frac": wave_total("task_s")
-        / (sum(w["wall"] for w in crawl.waves) * args.cores),
+        / (sum(w["wall"] for w in waves) * args.cores),
         "crawl.task_cpu_s": wave_total("cpu_s") / nw,
         "crawl.gc_s": wave_total("gc_s") / nw,
         "crawl.shuffle_bytes": wave_total("shuffle_write_bytes") / nw,
         "crawl.spill_bytes": wave_total("spill_bytes") / nw,
-        "crawl.resume_from_s": record["resume_s"],
+        "crawl.resume_from_s": statistics.median(
+            tr.durations("crawl.resume_from")),
         "crawl.purge_s": tr.durations("crawl.purge_seen")[0],
-        "crawl.items_df_s": statistics.median(tr.durations("crawl.items_df")),
-        "crawl.waves": crawl.units[0]["waves"],
-        "crawl.fetched": crawl.units[0]["fetched"],
-        "crawl.items": crawl.units[0]["items"],
+        "crawl.items_df_s": tr.durations("crawl.items_df")[0],
+        "crawl.waves": counts["waves"],
+        "crawl.fetched": counts["fetched"],
+        "crawl.items": counts["items"],
         "crawl.new_links": n_links,
         "crawl.dups_filtered": n_dups,
-        "crawl.robots_blocked": sum(w["robots_blocked"] for w in first),
-        "crawl.inserted": crawl.units[0]["inserted"],
+        "crawl.robots_blocked": sum(w["robots_blocked"] for w in waves),
+        "crawl.inserted": counts["inserted"],
         "crawl.dup_frac": n_dups / max(1, n_links),
         "kernel.us_per_url": kernel_us,
         "parse.us_core_per_url": parse_us,
@@ -903,7 +971,7 @@ def main(argv=None):
         f"python {h['python']}, java {h.get('java')}, "
         f"load {h['loadavg_before']} -> {h['loadavg_after']}")
     for w in record.get("waves", []):
-        log(f"#   {w['wave']:>7} unit {w['unit']} fetched {w['fetched']:6d} "
+        log(f"#   {w['wave']:>7} fetched {w['fetched']:6d} "
             f"wall {w['wall']:6.2f}s jobs {w['jobs']:3d} "
             f"(not succeeded {w['jobs_failed']}) stages {w['stages']:3d} "
             f"tasks {w['tasks']:4d}")
