@@ -2724,8 +2724,6 @@ def q_seen_cuckoo(spark, sf_dir):
     flag a candidate stream sketch-first with an exact verify join —
     the output is exact regardless of sketch false positives, so the
     DuckDB oracle is a plain semi-join."""
-    import base64
-
     from scrapy_crawler_german_real_estate_sites_spark.operators.cuckoo import (
         build_cuckoo,
         cuckoo_shard_rows,
@@ -2736,23 +2734,14 @@ def q_seen_cuckoo(spark, sf_dir):
     pages = _fx(spark, sf_dir, "pages").select("url")
     seen = pages.where(F.length("url") % 3 != 0)
     purged = seen.where(F.length("url") % 5 == 0)
-    # size the table from the data: next power of two holding the seen
-    # set under ~80% load (a fixed 2^17 overflows the stash at sf0.1+,
-    # and stash probes are O(stash) per batch — the resize IS the spec's
-    # answer to load, and it changes nothing semantically: the sketch is
-    # advisory, the verify join is the truth)
-    n_seen = seen.count()
-    n_buckets = 1 << max(17, (max(1, int(n_seen / 0.8)) // 4).bit_length())
-    cf = build_cuckoo(seen, n_buckets=n_buckets)
+    # build_cuckoo sizes the table from the data (n_buckets_for: ~80%
+    # load, so nothing spills into the linearly-probed stash); the size
+    # changes nothing semantically — the verify join is the truth
+    cf = build_cuckoo(seen)
     # in-place purge: partitions hash dead URLs to compact (bucket, fp)
     # entries, the driver deletes those fingerprints — no rebuild
-    for row in cuckoo_shard_rows(
-            purged.coalesce(8), cf.n_buckets, cf.slots,
-            "payload string, cnt long",
-            lambda b64, cnt: {"payload": b64, "cnt": cnt}).collect():
-        bks, fps = decode_entry_payload(
-            base64.b64decode(row.payload), int(row.cnt))
-        cf.delete_entries(bks, fps)
+    for row in cuckoo_shard_rows(purged.coalesce(8), cf.n_buckets).collect():
+        cf.delete_entries(*decode_entry_payload(row.entries, row.n))
     surviving = seen.join(purged, "url", "left_anti")
     cand = pages.unionByName(
         pages.where(F.length("url") % 2 == 1)

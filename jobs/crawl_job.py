@@ -32,10 +32,6 @@ def main(argv=None):
     ap.add_argument("--resume-from", default=None,
                     help="checkpoint dir from a previous run")
     ap.add_argument("--shuffle-partitions", default=None)
-    ap.add_argument("--seen-filter", default="bloom",
-                    choices=["bloom", "cuckoo", "exact"],
-                    help="URL-seen sketch: bloom (default) or the "
-                         "DELETABLE cuckoo filter (purge_seen in place)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -68,7 +64,6 @@ def main(argv=None):
     eng = CrawlEngine(
         spark, fix, workdir=args.out, hour=args.hour,
         checkpoint_every=args.checkpoint_every, track_order=False,
-        seen_filter=args.seen_filter,
     )
     if args.resume_from:
         eng.resume_from(args.resume_from)

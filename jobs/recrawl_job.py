@@ -121,11 +121,13 @@ def main(argv=None):
             order_cols=["_prio", "fifo_seq"],
         ).localCheckpoint(eager=True)
         batch = tagged.where("sel")
+        # one capture per url even when pages holds a url twice: duplicate
+        # rows would fan out the captures and the stats join below
         fetched = pages.join(
             F.broadcast(batch.select("url")), "url", "inner"
-        ).select(
-            "url", F.lit(iter_no).alias("wave"),
-            F.md5(F.col(body_col)).alias("digest"))
+        ).groupBy("url").agg(
+            F.min(F.md5(F.col(body_col))).alias("digest")
+        ).select("url", F.lit(iter_no).alias("wave"), "digest")
         all_captures = (fetched if all_captures is None
                         else all_captures.unionByName(fetched))
         n = batch.count()

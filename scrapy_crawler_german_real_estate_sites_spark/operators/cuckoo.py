@@ -1,20 +1,20 @@
-"""Cuckoo filter — the DELETABLE URL-seen sketch (north_star: "bloom-filter
+"""Cuckoo filter — the engine's URL-seen sketch (north_star: "bloom-filter
 + cuckoo-verified URL-seen set").
 
-Role next to the Bloom filter (operators/seen.py): the bloom is the
-per-wave hot path (vectorized probes, O(bits) shard merge), but it cannot
-forget — once a URL's bits are set they stay set, so a 10^10-URL frontier
-whose liveness pass (D9/D10) deletes dead listings accumulates
-false-positive pressure from URLs that no longer exist, and the only
-remedy is a periodic full rebuild (`CrawlEngine.resume_from` does exactly
-that).  A cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically
-Better than Bloom", CoNEXT) stores displaceable fingerprints instead of
-OR-ed bits, which buys:
+The sketch is ADVISORY: the engine's dedup is one ``left_anti`` join
+against the exact seen table, and the sketch's might-contain flag is only
+a residual conjunct of that join's condition, so the choice of sketch
+changes cost, never an output byte.  The cuckoo filter (Fan et al. 2014,
+"Cuckoo Filter: Practically Better than Bloom", CoNEXT) is kept over a
+Bloom filter because it stores displaceable fingerprints instead of OR-ed
+bits, which buys:
 
 * **deletion**: a liveness purge removes dead URLs from the sketch
-  in-place — no rebuild job over 10^10 rows;
+  in place — no rebuild job over 10^10 rows (the retention case of
+  *A Learned Cuckoo Filter for Approximate Membership Queries over
+  Variable-sized Sliding Windows*, SIGMOD 2023);
 * **lower FP at the same size**: b·2/2^f ≈ 0.012% at b=4 slots × 16-bit
-  fingerprints vs ~0.8% for the default bloom config;
+  fingerprints vs ~0.8% for a comparable bloom config;
 * **bounded lookups**: exactly 2 bucket reads per probe.
 
 Design (spec-faithful, vectorized where it matters):
@@ -23,21 +23,23 @@ Design (spec-faithful, vectorized where it matters):
   ``i1 = H(url)`` and ``i2 = i1 XOR H'(fp)`` (partial-key cuckoo
   hashing — the pair is recoverable from (bucket, fp) alone, which is
   what makes distributed shard MERGE possible: shards emit their
-  occupied (bucket, fp) entries and the driver re-inserts, never seeing
-  a URL string).
+  (bucket, fp) entries and the driver re-inserts, never seeing a URL
+  string).
+* :func:`n_buckets_for` sizes the table from the entry count: a full
+  table spills into the stash, which every probe scans linearly.
 * Hashing reuses the engine's vectorized primitives: one
   ``pd.util.hash_array`` pass per batch + a splitmix64 finalizer for the
   fingerprint (no per-row Python on the lookup path).
 * Lookups (:meth:`contains_series`) are fully vectorized numpy probes of
-  the broadcast table — the same budget as the bloom's probe.
+  the broadcast table.
 * Inserts walk the standard kick chain (≤ ``max_kicks`` displacements);
   bulk insert is a thin loop over precomputed vectors.  Inserts happen
   at build/merge time (driver or per-partition shard), not per-lookup.
 
-At 10^10 URLs the table is sharded per netloc bucket exactly like the
-bloom (each executor holds its bucket's shard); the sandbox default is a
-single shard, and :func:`build_cuckoo` keeps the driver merge O(entries)
-with 10-byte compact entries, never URL strings.
+At 10^10 URLs the table is sharded per netloc bucket (each executor holds
+its bucket's shard); the sandbox default is a single shard, and
+:func:`build_cuckoo` keeps the driver merge O(entries) with 10-byte
+compact entries, never URL strings.
 """
 
 from __future__ import annotations
@@ -51,6 +53,12 @@ from pyspark.sql.types import BooleanType
 from .seen import _hash_pair
 
 
+def n_buckets_for(n_entries: int) -> int:
+    """Power-of-two bucket count that holds ``n_entries`` fingerprints in
+    4-slot buckets under ~80% load, never below 2^17 buckets (1 MB)."""
+    return 1 << max(17, (max(1, int(n_entries / 0.8)) // 4).bit_length())
+
+
 def _splitmix16(fp: np.ndarray) -> np.ndarray:
     """64-bit splitmix finalizer over the fingerprint (for the partner-
     bucket hash H'(fp)) — deterministic, vectorized."""
@@ -61,6 +69,15 @@ def _splitmix16(fp: np.ndarray) -> np.ndarray:
         z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
         z = z ^ (z >> np.uint64(31))
     return z
+
+
+def _fp_i1(urls, n_buckets: int) -> tuple[np.ndarray, np.ndarray]:
+    """(fingerprint, primary bucket) per URL for a ``n_buckets`` table."""
+    h1, h2 = _hash_pair(np.asarray(urls, dtype=object))
+    fp = (h2 & np.uint64(0xFFFF)).astype(np.uint16)
+    fp[fp == 0] = 1  # 0 is the empty-slot sentinel
+    i1 = (h1 & np.uint64(n_buckets - 1)).astype(np.int64)
+    return fp, i1
 
 
 class CuckooFilter:
@@ -83,13 +100,6 @@ class CuckooFilter:
         self._rng = np.random.RandomState(0xC0C0)  # deterministic kicks
 
     # -- hashing ------------------------------------------------------
-    def _fp_i1(self, urls) -> tuple[np.ndarray, np.ndarray]:
-        h1, h2 = _hash_pair(np.asarray(urls, dtype=object))
-        fp = (h2 & np.uint64(0xFFFF)).astype(np.uint16)
-        fp[fp == 0] = 1  # 0 is the empty-slot sentinel
-        i1 = (h1 & np.uint64(self.n_buckets - 1)).astype(np.int64)
-        return fp, i1
-
     def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
         return (
             i.astype(np.uint64) ^ (
@@ -138,7 +148,7 @@ class CuckooFilter:
         <95% load and treat a shortfall as the resize signal)."""
         if not len(urls):
             return 0
-        fp, i1 = self._fp_i1(urls)
+        fp, i1 = _fp_i1(urls, self.n_buckets)
         return sum(self._insert_entry(int(a), int(f))
                    for a, f in zip(i1, fp))
 
@@ -147,7 +157,7 @@ class CuckooFilter:
         (+ the victim cache, normally empty)."""
         if not len(s):
             return pd.Series([], dtype=bool)
-        fp, i1 = self._fp_i1(s.to_numpy(dtype=object))
+        fp, i1 = _fp_i1(s.to_numpy(dtype=object), self.n_buckets)
         i2 = self._alt(i1, fp)
         hit = ((self.table[i1] == fp[:, None]).any(axis=1)
                | (self.table[i2] == fp[:, None]).any(axis=1))
@@ -160,7 +170,7 @@ class CuckooFilter:
         the bloom cannot do).  Returns the number actually deleted."""
         if not len(urls):
             return 0
-        fp, i1 = self._fp_i1(urls)
+        fp, i1 = _fp_i1(urls, self.n_buckets)
         i2 = self._alt(i1, fp)
         deleted = 0
         for f, a, b in zip(fp, i1, i2):
@@ -285,34 +295,35 @@ class CuckooFilter:
     def load(self) -> float:
         return float((self.table != 0).sum()) / self.table.size
 
+    @property
+    def n_entries(self) -> int:
+        """Stored fingerprints, stash included."""
+        return int(np.count_nonzero(self.table)) + len(self.stash)
 
-def cuckoo_shard_rows(urls_df: DataFrame, n_buckets: int, slots: int,
-                      out_schema: str, row_fn):
-    """Per-partition compact (bucket, fp) entry shards over a url-disjoint
-    DataFrame — the cuckoo analogue of ``seen.bloom_shard_rows``: yields
-    one row per non-empty partition via ``row_fn(b64_entries: str,
-    count: int)`` where the payload is ``count`` int64 buckets followed by
-    ``count`` uint16 fingerprints (10 bytes/URL, never URL strings).  The
-    driver re-inserts with :meth:`CuckooFilter.merge_entries`."""
-    import base64
 
-    probe = CuckooFilter(n_buckets, slots)
-
+def cuckoo_shard_rows(urls_df: DataFrame, n_buckets: int,
+                      col: str = "url") -> DataFrame:
+    """Per-partition compact entry shards: one ``(entries binary, n long)``
+    row per non-empty partition, where ``entries`` is ``n`` int64 primary
+    buckets followed by ``n`` uint16 fingerprints (10 bytes/URL, never URL
+    strings).  The driver decodes with :func:`decode_entry_payload` and
+    re-inserts (:meth:`CuckooFilter.merge_entries`) or deletes
+    (:meth:`CuckooFilter.delete_entries`) in place."""
     def partial(batches):
         bs, fs = [], []
         for pdf in batches:
             if len(pdf):
-                fp, i1 = probe._fp_i1(pdf["url"].tolist())
+                fp, i1 = _fp_i1(pdf[col].tolist(), n_buckets)
                 bs.append(i1)
                 fs.append(fp)
         if bs:
-            payload = (np.concatenate(bs).tobytes()
-                       + np.concatenate(fs).tobytes())
-            cnt = sum(len(a) for a in bs)
-            yield pd.DataFrame(
-                [row_fn(base64.b64encode(payload).decode("ascii"), cnt)])
+            yield pd.DataFrame({
+                "entries": [np.concatenate(bs).tobytes()
+                            + np.concatenate(fs).tobytes()],
+                "n": [sum(len(a) for a in bs)],
+            })
 
-    return urls_df.mapInPandas(partial, out_schema)
+    return urls_df.select(col).mapInPandas(partial, "entries binary, n long")
 
 
 def decode_entry_payload(raw: bytes, count: int):
@@ -323,43 +334,26 @@ def decode_entry_payload(raw: bytes, count: int):
     return buckets, fps
 
 
-def build_cuckoo(seen_urls: DataFrame, col="url",
-                 n_buckets: int = 1 << 18, slots: int = 4) -> CuckooFilter:
-    """Distributed build: each partition hashes its URLs to compact
-    (bucket:int64, fp:uint16) entry arrays (10 bytes/URL — no URL strings
-    cross to the driver), and the driver merges by re-insert.  Mirrors
-    :func:`..operators.seen.build_bloom`'s shard topology; at 10^10 URLs
-    this becomes one shard per netloc bucket."""
-    probe = CuckooFilter(n_buckets, slots)
-
-    def partial(batches):
-        bs, fs = [], []
-        for pdf in batches:
-            if len(pdf):
-                fp, i1 = probe._fp_i1(pdf[col].tolist())
-                bs.append(i1)
-                fs.append(fp)
-        if bs:
-            yield pd.DataFrame({
-                "buckets": [np.concatenate(bs).tobytes()],
-                "fps": [np.concatenate(fs).tobytes()],
-            })
-
+def build_cuckoo(seen_urls: DataFrame, col="url", n_buckets: int = None,
+                 slots: int = 4) -> CuckooFilter:
+    """Distributed build: partitions hash their URLs to compact entry
+    shards (:func:`cuckoo_shard_rows`), the driver merges by re-insert.
+    The bucket index only needs the low bits of the URL hash, so shards
+    are hashed at the largest table size and masked down once the total
+    entry count has sized the table (:func:`n_buckets_for`) — one job."""
+    shards = [decode_entry_payload(r.entries, int(r.n)) for r in
+              cuckoo_shard_rows(seen_urls, 1 << 62, col).collect()]
+    n_buckets = n_buckets or n_buckets_for(sum(len(b) for b, _ in shards))
     cf = CuckooFilter(n_buckets, slots)
-    for row in seen_urls.select(col).mapInPandas(
-            partial, "buckets binary, fps binary").collect():
-        cf.merge_entries(
-            np.frombuffer(row.buckets, dtype=np.int64),
-            np.frombuffer(row.fps, dtype=np.uint16),
-        )
+    for buckets, fps in shards:
+        cf.merge_entries(buckets & (n_buckets - 1), fps)
     return cf
 
 
 def with_cuckoo_flag(df: DataFrame, cf: CuckooFilter, url_col="norm_url",
                      flag_col="maybe_seen") -> DataFrame:
-    """Boolean membership column over the broadcast table — drop-in for
-    :func:`..operators.seen.with_bloom_flag` where the seen set must also
-    support deletion."""
+    """Boolean might-contain column over the broadcast table (vectorized
+    pandas UDF; no false negatives)."""
     spark = df.sparkSession
     b = spark.sparkContext.broadcast(
         (cf.to_bytes(), cf.n_buckets, cf.slots))

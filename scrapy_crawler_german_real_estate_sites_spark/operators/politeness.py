@@ -203,7 +203,7 @@ def _best_match_len(rules, path):
         F.coalesce(rules, F.array()),
         lambda r: F.regexp_like(path, _rule_regex(r)),
     )
-    return F.array_max(F.transform(matched, lambda r: F.length(r)))
+    return F.array_max(F.transform(matched, lambda r: F.octet_length(r)))
 
 
 def robots_filter_rfc(links: DataFrame, robots: DataFrame):
@@ -334,4 +334,4 @@ def sql_best_match_len(rules_sql: str, path_sql: str) -> str:
     """DuckDB mirror of :func:`_best_match_len` (NULL if none match)."""
     return (f"list_max(list_transform(list_filter({rules_sql}, "
             f"r -> regexp_matches({path_sql}, {sql_rule_regex('r')})), "
-            f"r -> length(r)))")
+            f"r -> strlen(r)))")

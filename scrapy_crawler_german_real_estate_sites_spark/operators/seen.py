@@ -1,22 +1,15 @@
-"""URL-seen set: broadcast Bloom filter + exact verify join (SURVEY.md D2/J5).
+"""URL hashing shared by the seen-set sketches, and a broadcast Bloom
+filter kept as the measured baseline for the cuckoo filter.
 
-The reference does one Mongo ``count_documents`` RPC per candidate URL
-(``database.py:88-98``) — the engine replaces that with:
-
-1. a broadcast Bloom filter over seen-URL hashes: candidates that are
-   *definitely new* skip the join entirely (the overwhelmingly common case
-   on a growing crawl);
-2. an exact equi-join for bloom-positives (false-positive rate makes the
-   bloom advisory only — the join is the truth, playing the
-   "cuckoo-verified" role of BASELINE.json:north_rule).
+The engine's URL-seen sketch is the deletable cuckoo filter
+(``operators/cuckoo.py``), which hashes through :func:`_hash_pair`.  The
+Bloom filter below is not on any crawl path: ``perfbench/run.py`` builds,
+flags and scores it next to the cuckoo filter on every traced benchmark
+run, so the two sketches' build, probe and false-positive costs stay
+comparable.
 
 The bloom is built distributed: per-partition bitmaps OR-merged at the
-driver (a classic commutative sketch merge).  Hashing: two independent
-63-bit hashes via blake2b, double-hashed to k probes (public standard
-technique).  At 10^10-URL scale this becomes per-netloc-bucket shards
-(each executor needs only its bucket's shard); the sandbox default is one
-shard — the shard routine below takes a ``bucket`` key to make that a
-config change.
+driver (a classic commutative sketch merge), double-hashed to k probes.
 """
 
 from __future__ import annotations
@@ -32,7 +25,7 @@ def _hash_pair(urls) -> tuple:
     """Vectorized double hash: one 64-bit hash per url via
     ``pd.util.hash_array`` (cython xxhash-style, ~100ns/row), split into
     (h1, h2) for standard double-hashed k probes.  No per-row Python —
-    the bloom path must stay off the interpreter at millions of links
+    the sketch probes must stay off the interpreter at millions of links
     per wave."""
     arr = np.asarray(urls, dtype=object)
     h = pd.util.hash_array(arr, hash_key="spark_graft_blm1")
@@ -73,9 +66,6 @@ class BloomFilter:
         self.k = k
         self.bits = np.zeros(m_bits // 8, dtype=np.uint8)
 
-    def add_many(self, urls):
-        self.bits |= _set_bits(urls, self.m, self.k)
-
     def merge_bytes(self, raw: bytes):
         self.bits |= np.frombuffer(raw, dtype=np.uint8)
 
@@ -107,32 +97,6 @@ def build_bloom(seen_urls: DataFrame, col="url", m_bits=1 << 24, k=7) -> BloomFi
     for row in seen_urls.select(col).mapInPandas(partial, "shard binary").collect():
         bf.merge_bytes(row.shard)
     return bf
-
-
-def bloom_shard_rows(urls_df: DataFrame, m_bits: int, k: int, out_schema: str,
-                     row_fn):
-    """Per-partition bloom bitmaps over a url-disjoint DataFrame (caller
-    guarantees disjointness, e.g. via ``.distinct()``): yields one row per
-    non-empty partition via ``row_fn(b64_bitmap: str, count: int)``.  The
-    driver ORs the 2 MB shards instead of materializing every URL string —
-    the collect is O(partitions), not O(inserted URLs)."""
-    import base64
-
-    def partial(batches):
-        bits = None
-        cnt = 0
-        for pdf in batches:
-            if len(pdf):
-                if bits is None:
-                    bits = np.zeros(m_bits // 8, dtype=np.uint8)
-                bits |= _set_bits(pdf["url"].tolist(), m_bits, k)
-                cnt += len(pdf)
-        if cnt:
-            yield pd.DataFrame(
-                [row_fn(base64.b64encode(bits.tobytes()).decode("ascii"), cnt)]
-            )
-
-    return urls_df.mapInPandas(partial, out_schema)
 
 
 def with_bloom_flag(df: DataFrame, bf: BloomFilter, url_col="norm_url",

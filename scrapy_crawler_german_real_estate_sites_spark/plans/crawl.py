@@ -1,21 +1,27 @@
 """The crawl engine: a partitioned URL frontier drained in waves.
 
 Replaces the reference's cron + caller.py + 10 scrapyd nodes + Twisted
-event loop (SURVEY.md §3.1) with one declarative per-wave dataflow,
-materialized as THREE Spark jobs per wave (every extra barrier is serial
-time that caps scaling):
+event loop (SURVEY.md §3.1) with one declarative per-wave dataflow built
+around three materialization points (every extra barrier is serial time
+that caps scaling):
 
-    [job 1: parse]   fetch (broadcast-hash join batch × pages)
-                       → parse + link-extract               [Arrow mapInPandas]
-                       → per-seed pipeline pass             [applyInPandas]
-    [job 2: collect] per-seed state + per-partition lineage stats
-                       + inserted-URL bloom shards, one driver round-trip
-    [job 3: frontier] robots filter → bloom + seen-rule dedup (single
-                       anti-join) → FIFO sequence window → union with the
-                       unselected remainder → tag_batch marks the NEXT
-                       wave's politeness batch ('sel' column)
+    [parse]    fetch (broadcast-hash join batch × pages)
+                 → parse + link-extract                 [Arrow mapInPandas]
+                 → per-seed pipeline pass               [mapInPandas]
+               → checkpoint
+    [collect]  per-seed state + per-partition lineage stats
+                 + inserted-URL cuckoo entry shards, one driver round-trip
+    [frontier] robots filter → seen-rule dedup (single anti-join) → FIFO
+                 sequence window → union with the unselected remainder →
+                 tag_batch marks the NEXT wave's politeness batch ('sel'
+                 column) → checkpoint
 
-The wave-start "select" is a filter over job 3's cached blocks from the
+These are not the wave's only Spark jobs: the batch and new-link counts,
+broadcast builds and adaptive-execution stage jobs come on top, and the
+traced drain benchmark (``perfbench/run.py --trace 1``) counts about 30
+jobs per wave.
+
+The wave-start "select" is a filter over the frontier checkpoint from the
 previous wave — politeness.tag_batch fuses batch selection and the
 remove-fetched frontier update into complementary filters.
 
@@ -28,7 +34,9 @@ sequential reference simulation — verified by tests/test_crawl_parity.py.
 Scale notes: the fetch join broadcasts the (politeness-bounded) wave batch
 so the pages table is never shuffled; at cluster scale pages is an Iceberg
 table bucketed by url and the join is storage-partitioned.  The seen set is
-a broadcast bloom + exact verify join (operators/seen.py).  Frontier and
+an exact table that the dedup anti-join reads; a cuckoo filter over it
+(operators/cuckoo.py) rides along as an ADVISORY might-contain flag in the
+join condition and can delete in place (``purge_seen``).  Frontier and
 seen live as snapshots per wave (parquet here, Iceberg snapshots in prod) —
 ``resume_from`` restarts a run mid-crawl from any wave, exactly
 (north_rule: resumable from checkpoint).  Driver-held per-seed counters are
@@ -50,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import cuckoo as cuckoo_ops
-from ..operators import politeness, seen as seen_ops
+from ..operators import politeness
 from ..operators.parse_batch import explode_links, parse_pages
 from .simulator import DEFAULT_ITEM_BUDGET, ITEM_BUDGETS, DUP_STREAK_LIMIT
 
@@ -376,6 +384,9 @@ def _should_spill_items(spark: SparkSession, fix_dir: str) -> bool:
 
 class CrawlEngine:
     _SEEN_FOLD = 4  # fold the lazy seen-union every N waves
+    # initial URL-seen sketch size: the sketch is rebuilt at
+    # n_buckets_for(entries) once the seen set outgrows it
+    _CUCKOO_BUCKETS = cuckoo_ops.n_buckets_for(0)
 
     def __init__(
         self,
@@ -387,15 +398,6 @@ class CrawlEngine:
         run_ts: datetime.datetime = None,
         iter_seconds: float = 1e6,  # default: politeness-unbounded waves
         token_scale: float = 1.0,
-        use_bloom: bool = True,
-        seen_filter: str = None,  # "bloom" (default) | "cuckoo" | "exact".
-        #   The sketch that pre-filters the exact seen anti-join.  "cuckoo"
-        #   (operators/cuckoo.py, Fan et al. 2014) is the north_rule's
-        #   DELETABLE variant: purge_seen() removes dead URLs from the
-        #   sketch IN PLACE (no 10^10-row rebuild) so a re-discovered URL
-        #   is re-crawled; the bloom can only forget by rebuilding.
-        #   None -> "bloom" if use_bloom else "exact" (back-compat; the
-        #   parity suites' default path is byte-identical).
         item_budgets: dict = None,
         checkpoint_every: int = 0,  # 0 = no parquet checkpoints
         epoch: int = 0,  # D7 run generation (immowelt progressCounter):
@@ -433,9 +435,6 @@ class CrawlEngine:
         self.run_ts = run_ts or datetime.datetime(2021, 5, 1, hour, 0, 0)
         self.iter_seconds = iter_seconds
         self.token_scale = token_scale
-        self.use_bloom = use_bloom
-        self.seen_filter = seen_filter or ("bloom" if use_bloom else "exact")
-        assert self.seen_filter in ("bloom", "cuckoo", "exact")
         self.checkpoint_every = checkpoint_every
         self.track_order = track_order
         self.epoch = int(epoch)
@@ -592,12 +591,9 @@ class CrawlEngine:
         # _SEEN_FOLD waves to bound plan depth.
         self.seen = self.spark.createDataFrame([], SEEN_SCHEMA)
         self._seen_unfolded = 0
-        self.bloom = seen_ops.BloomFilter()
-        # 2^19 buckets x 4 slots x 2B = 4 MB table (~2M fingerprints at
-        # 95% load, ample for the sandbox SFs); at 10^10 URLs this is one
-        # shard per netloc bucket exactly like the bloom.
-        self.cuckoo = (cuckoo_ops.CuckooFilter(n_buckets=1 << 19)
-                       if self.seen_filter == "cuckoo" else None)
+        # the deletable URL-seen sketch (advisory: the anti-join against
+        # ``seen`` is the truth); at 10^10 URLs one shard per netloc bucket
+        self.cuckoo = cuckoo_ops.CuckooFilter(self._CUCKOO_BUCKETS)
         self.tagged = self._tag(pending0, 0).localCheckpoint(eager=True)
         self.logs = {k: [] for k in ("fetch", "dup_skips")}
         self._trash = []
@@ -655,6 +651,35 @@ class CrawlEngine:
             for sid, s in self.state.items()
         ]
         return self.spark.createDataFrame(rows, STATE_SCHEMA)
+
+    def _entry_shards(self, urls: DataFrame) -> DataFrame:
+        """Cuckoo entry shards of url-disjoint ``urls`` as ``rec='ckf'``
+        rows of the wave's state collect — the payload base64 in
+        ``doc_json``, its entry count in ``parsed``; compact (bucket, fp)
+        entries, never URL strings.  ``coalesce`` (no shuffle, keeps
+        url-disjointness) bounds the shard count."""
+        return cuckoo_ops.cuckoo_shard_rows(
+            urls.coalesce(8), self.cuckoo.n_buckets
+        ).select(
+            F.lit("ckf").alias("rec"),
+            F.lit(None).cast("string").alias("seed_id"),
+            F.base64("entries").alias("doc_json"),
+            F.lit(None).cast("int").alias("partition_id"),
+            F.col("n").alias("parsed"),
+            F.lit(None).cast("long").alias("items"),
+        )
+
+    @staticmethod
+    def _shard_entries(row) -> tuple:
+        """(buckets, fps) arrays of one :meth:`_entry_shards` row."""
+        return cuckoo_ops.decode_entry_payload(
+            base64.b64decode(row.doc_json), int(row.parsed))
+
+    def _rebuild_sketch(self) -> None:
+        """Rebuild the sketch from the exact seen set, sized from the
+        data (one distributed job; entries, not URLs, reach the driver)."""
+        self.cuckoo = cuckoo_ops.build_cuckoo(
+            self.seen.select("url").distinct())
 
     def _unpersist_later(self, df):
         """Queue a superseded localCheckpoint snapshot for release.  The
@@ -792,7 +817,7 @@ class CrawlEngine:
             ~F.col("kind").isin("__state__", "__item__")
         )
         item_rows = passed.where(F.col("kind") == "__item__")
-        # non-eager localCheckpoint: the state job below (bloom shards)
+        # non-eager localCheckpoint: the state job below (sketch shards)
         # computes this aggregation anyway and materializes the NARROW
         # (url, seed_id, fifo_seq) rows as blocks as a side effect — the
         # lazy seen-union then roots in those blocks instead of re-running
@@ -826,53 +851,23 @@ class CrawlEngine:
                 "partition_id", "parsed", "items",
             )
         )
-        # inserted URLs reach the driver as per-partition BLOOM SHARDS
-        # (rec='blm': 2 MB base64 bitmap + distinct count), not as URL
-        # strings — collecting ~85k Row objects per wave measured ~55 s of
-        # pure driver time per run at sf0.1, and at 10^10 URLs it couldn't
-        # work at all.  ``distinct()`` shuffles by url, so partitions are
-        # url-disjoint and the shard counts sum exactly.
-        # coalesce (no shuffle, keeps url-disjointness) bounds the shard
-        # count — with 4x-core shuffle partitions the collect would move
-        # partitions x 2 MB of bitmap per wave otherwise
-        shard_schema = ("rec string, seed_id string, doc_json string, "
-                        "partition_id int, parsed long, items long")
-        if self.seen_filter == "cuckoo":
-            # compact (bucket, fp) entries instead of bitmaps: 10 B/URL,
-            # still never URL strings; the driver re-inserts (and can
-            # later DELETE the same entries in place — purge_seen)
-            ins_shards = cuckoo_ops.cuckoo_shard_rows(
-                inserts.select("url").distinct().coalesce(8),
-                self.cuckoo.n_buckets, self.cuckoo.slots, shard_schema,
-                lambda b64, cnt: {
-                    "rec": "ckf", "seed_id": None, "doc_json": b64,
-                    "partition_id": None, "parsed": cnt, "items": None,
-                },
-            )
-        else:
-            ins_shards = seen_ops.bloom_shard_rows(
-                inserts.select("url").distinct().coalesce(8),
-                self.bloom.m, self.bloom.k, shard_schema,
-                lambda b64, cnt: {
-                    "rec": "blm", "seed_id": None, "doc_json": b64,
-                    "partition_id": None, "parsed": cnt, "items": None,
-                },
-            )
+        # inserted URLs reach the driver as per-partition cuckoo ENTRY
+        # SHARDS (10 B/URL), not as URL strings — collecting ~85k Row
+        # objects per wave measured ~55 s of pure driver time per run at
+        # sf0.1, and at 10^10 URLs it couldn't work at all.  ``distinct()``
+        # shuffles by url, so partitions are url-disjoint and the shard
+        # counts sum exactly.
+        ins_shards = self._entry_shards(inserts.select("url").distinct())
         part_stats = []
-        n_inserted = 0
+        shards = []
         for r in state_rows.unionByName(stat_rows).unionByName(ins_shards).collect():
             if r.rec == "state":
                 self.state[r.seed_id].update(json.loads(r.doc_json))
             elif r.rec == "pstat":
                 part_stats.append(r)
-            elif r.rec == "ckf":
-                buckets, fps = cuckoo_ops.decode_entry_payload(
-                    base64.b64decode(r.doc_json), int(r.parsed))
-                self.cuckoo.merge_entries(buckets, fps)
-                n_inserted += int(r.parsed)
             else:
-                self.bloom.merge_bytes(base64.b64decode(r.doc_json))
-                n_inserted += int(r.parsed)
+                shards.append(self._shard_entries(r))
+        n_inserted = sum(len(buckets) for buckets, _ in shards)
         _mark('state')
 
         # --- seen update FIRST: this wave's inserts must be visible to the
@@ -889,6 +884,14 @@ class CrawlEngine:
                 self.seen = self.seen.localCheckpoint(eager=True)
                 self._unpersist_later(old_seen)
                 self._seen_unfolded = 0
+            # a table the data outgrows spills into the stash that every
+            # probe scans linearly: rebuild at the data's size instead
+            if (cuckoo_ops.n_buckets_for(self.cuckoo.n_entries + n_inserted)
+                    > self.cuckoo.n_buckets):
+                self._rebuild_sketch()
+            else:
+                for buckets, fps in shards:
+                    self.cuckoo.merge_entries(buckets, fps)
         _mark('seen')
 
         # --- new links from effective rows: the pipeline pass decided
@@ -914,18 +917,17 @@ class CrawlEngine:
             "norm_url", F.substring_index(F.col("url"), "?", 1)
         )
         seen_df = self.seen
-        if self.seen_filter == "bloom":
-            cand = seen_ops.with_bloom_flag(cand, self.bloom)
-        elif self.seen_filter == "cuckoo":
-            cand = cuckoo_ops.with_cuckoo_flag(cand, self.cuckoo)
+        cand = cuckoo_ops.with_cuckoo_flag(cand, self.cuckoo)
         # reference dup rule (database.py:88-98): candidate is a dup iff an
         # item with EXACTLY url==strip(candidate) was inserted before the
         # parent page's parse (FIFO position), or by another seed / a
         # previous run (fifo_seq = -1).  ONE anti-join covers all cases:
-        # rows the bloom clears (~maybe_seen — no false negatives) and
+        # rows the sketch clears (~maybe_seen — no false negatives) and
         # no-dup-check kinds carry a false conjunct, so no seen row can
-        # match them and the anti-join passes them through — no
-        # candidate-set split, no intermediate checkpoint; the whole
+        # match them and the anti-join passes them through.  The flag is
+        # advisory: the planner keeps it as the join's residual condition,
+        # so every candidate is still probed.  No candidate-set split, no
+        # intermediate checkpoint; the whole
         # subtree roots in the checkpointed pass output and evaluates once
         # inside the wave-end frontier job.
         # coalesce: parse never emits NULL dup_check, but pin the fused
@@ -937,9 +939,7 @@ class CrawlEngine:
         ) & (
             (F.col("s.seed_id") != F.col("c.seed_id"))
             | (F.col("s.fifo_seq") < F.col("c.parent_fifo_seq"))
-        )
-        if self.seen_filter != "exact":
-            dup_cond = dup_cond & F.col("c.maybe_seen")
+        ) & F.col("c.maybe_seen")
         new_links = cand.alias("c").join(
             seen_df.alias("s"), dup_cond, "left_anti"
         )
@@ -1162,17 +1162,10 @@ class CrawlEngine:
             pending.select([f.name for f in PENDING_SCHEMA.fields]),
             self.iteration,
         ).localCheckpoint(eager=True)
-        # distributed sketch rebuild: per-partition shards merged at the
-        # driver (O(partitions) collect for bloom bitmaps, O(entries)
-        # compact rows for cuckoo) — NOT a collect of every seen URL,
-        # which is O(inserted URLs) driver memory/time and cannot work at
-        # the 10^10-URL north-star scale
-        if self.seen_filter == "cuckoo":
-            self.cuckoo = cuckoo_ops.build_cuckoo(
-                self.seen.select("url"),
-                n_buckets=self.cuckoo.n_buckets, slots=self.cuckoo.slots)
-        else:
-            self.bloom = seen_ops.build_bloom(self.seen.select("url"))
+        # distributed sketch rebuild from compact entry shards — NOT a
+        # collect of every seen URL, which is O(inserted URLs) driver
+        # memory/time and cannot work at the 10^10-URL north-star scale
+        self._rebuild_sketch()
 
     def purge_seen(self, dead_urls: DataFrame, url_col: str = "url") -> int:
         """Liveness/retention purge of the URL-seen set (the reference's
@@ -1180,12 +1173,9 @@ class CrawlEngine:
         dead URLs drop from BOTH the exact seen table and the membership
         sketch, so a re-discovered URL is re-crawled.
 
-        With ``seen_filter="cuckoo"`` the sketch delete is IN PLACE —
-        partitions hash their dead URLs to compact (bucket, fp) entries
-        and the driver deletes those fingerprints (Fan et al. 2014's
-        headline over the bloom: no 10^10-row sketch rebuild).  With
-        "bloom" the sketch cannot forget, so the bloom is REBUILT from
-        the surviving seen set — the O(seen) cost the cuckoo path avoids.
+        The sketch delete is IN PLACE — partitions hash their dead URLs
+        to compact (bucket, fp) entries and the driver deletes those
+        fingerprints (Fan et al. 2014: no 10^10-row sketch rebuild).
         Deletion is restricted to URLs actually present in the seen set
         (the cuckoo deletion precondition: deleting a never-inserted item
         could evict a colliding fingerprint), and removes ONE fingerprint
@@ -1194,7 +1184,7 @@ class CrawlEngine:
         re-fetches; rare) keeps one advisory copy, which only adds
         vanishing FP pressure: the exact seen table is the truth, so
         re-crawl decisions stay exact either way.  Returns the number of
-        sketch entries deleted (cuckoo) or -1 (bloom/exact)."""
+        sketch entries deleted."""
         dead = dead_urls.select(F.col(url_col).alias("url")).distinct()
         # semi-join BEFORE the seen update: the sketch must only delete
         # fingerprints it actually holds
@@ -1205,21 +1195,7 @@ class CrawlEngine:
             F.broadcast(dead_in_seen), "url", "left_anti"
         ).localCheckpoint(eager=True)
         self._seen_unfolded = 0
-        if self.seen_filter == "cuckoo":
-            shard_schema = ("rec string, seed_id string, doc_json string, "
-                            "partition_id int, parsed long, items long")
-            n = 0
-            for row in cuckoo_ops.cuckoo_shard_rows(
-                    dead_in_seen.coalesce(8), self.cuckoo.n_buckets,
-                    self.cuckoo.slots, shard_schema,
-                    lambda b64, cnt: {
-                        "rec": "ckf", "seed_id": None, "doc_json": b64,
-                        "partition_id": None, "parsed": cnt, "items": None,
-                    }).collect():
-                buckets, fps = cuckoo_ops.decode_entry_payload(
-                    base64.b64decode(row.doc_json), int(row.parsed))
-                n += self.cuckoo.delete_entries(buckets, fps)
-            return n
-        if self.seen_filter == "bloom":
-            self.bloom = seen_ops.build_bloom(self.seen.select("url"))
-        return -1
+        return sum(
+            self.cuckoo.delete_entries(*self._shard_entries(row))
+            for row in self._entry_shards(dead_in_seen).collect()
+        )

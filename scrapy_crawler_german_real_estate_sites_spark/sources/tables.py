@@ -150,6 +150,18 @@ def delete_rows(spark: SparkSession, path: str, keys: DataFrame, key_cols=("url"
     return n_before - read_state(spark, path).count()
 
 
+def driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 40% of physical RAM, capped at the
+    56g the engine was tuned with.  In local mode the driver JVM is the
+    executor; a heap sized past the host lets the JVM grow until the
+    kernel's OOM killer ends it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(56, int(ram * 0.4) >> 30))}g"
+
+
 def get_spark(app="spark-crawl-engine", cpus=None, shuffle_partitions=None,
               extra_conf=None) -> SparkSession:
     _ensure_pythonpath()
@@ -187,17 +199,18 @@ def get_spark(app="spark-crawl-engine", cpus=None, shuffle_partitions=None,
         # cache + per-wave localCheckpoint blocks with enough headroom that
         # G1 never runs mixed-GC storms mid-wave (measured multi-10s stage
         # stalls at 24g with 32 task threads at sf0.1)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "56g"))
+        .config("spark.driver.memory", driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        # local-cluster mode: the master string's memMB is only the WORKER
-        # capacity — executors still default to 1g heap and OOM-loop on
-        # real tiers unless spark.executor.memory is set explicitly
-        .config("spark.executor.memory",
-                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "13g")
-                if master.startswith("local-cluster") else "1g")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    # every master but local[N] runs separate executor JVMs.  local-cluster
+    # needs an explicit default: the master string's memMB is only the
+    # WORKER capacity, and executors left at 1g OOM-loop on real tiers
+    executor_mem = os.environ.get("SPARK_GRAFT_EXECUTOR_MEM") or (
+        "13g" if master.startswith("local-cluster") else None)
+    if executor_mem and master.split("[")[0] != "local":
+        b = b.config("spark.executor.memory", executor_mem)
     if table_format() == "iceberg":
         wh = os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"

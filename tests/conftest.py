@@ -10,8 +10,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from scrapy_crawler_german_real_estate_sites_spark.sources.tables import get_spark
 
-    s = get_spark(app="tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"),
-                  shuffle_partitions=8)
+    # the host's cores unless pinned; no test depends on the core count
+    cpus = (os.environ.get("SPARK_GRAFT_TEST_CPUS")
+            or os.environ.get("SPARK_GRAFT_CPUS")
+            or str(os.cpu_count() or 1))
+    s = get_spark(app="tests", cpus=cpus, shuffle_partitions=8)
     yield s
 
 

@@ -11,6 +11,7 @@ budget."""
 import json
 from collections import defaultdict
 
+import pandas as pd
 import pytest
 
 from scrapy_crawler_german_real_estate_sites_spark.plans.crawl import CrawlEngine
@@ -72,6 +73,9 @@ def test_seen_membership_identical(engine_run, sim_small):
     eng, _ = engine_run
     eng_seen = {r.url for r in eng.seen.select("url").collect()}
     assert eng_seen == sim_small.seen
+    # the URL-seen sketch has no false negatives
+    seen_urls = pd.Series(sorted(sim_small.seen))
+    assert eng.cuckoo.contains_series(seen_urls).all()
 
 
 def test_docs_alerts_dups_identical(engine_run, sim_small):

@@ -9,6 +9,7 @@ import pytest
 from scrapy_crawler_german_real_estate_sites_spark.operators.cuckoo import (
     CuckooFilter,
     build_cuckoo,
+    n_buckets_for,
     with_cuckoo_flag,
 )
 
@@ -86,6 +87,24 @@ def test_distributed_build_matches_local(spark):
             == local.contains_series(absent).to_numpy()).mean() > 0.999
     # compact-entry merge really carried every fingerprint
     assert dist.load == local.load
+
+
+def test_n_buckets_for_keeps_load_under_80pct():
+    assert n_buckets_for(0) == 1 << 17
+    for n in (10**5, 10**6, 3 * 10**6, 10**7):
+        nb = n_buckets_for(n)
+        assert nb & (nb - 1) == 0
+        assert n < 0.8 * 4 * nb           # under 80% load
+        assert nb == 1 << 17 or 0.8 * 4 * (nb // 2) <= n  # and smallest
+
+
+def test_build_sizes_table_from_data(spark):
+    urls = _urls(5000)
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    cf = build_cuckoo(df.repartition(3))
+    assert cf.n_buckets == n_buckets_for(5000)
+    assert cf.n_entries == 5000 and cf.stash == []
+    assert cf.contains_series(pd.Series(urls)).all()
 
 
 def test_with_cuckoo_flag_spark_path(spark):

@@ -1,10 +1,10 @@
-"""``seen_filter="cuckoo"`` end-to-end: the DELETABLE URL-seen sketch
-wired into CrawlEngine (north_rule's "bloom-filter + cuckoo-verified
-URL-seen set").
+"""The engine's URL-seen sketch end-to-end: the DELETABLE cuckoo filter
+(north_rule's "bloom-filter + cuckoo-verified URL-seen set").
 
-* parity: a cuckoo-filtered crawl is byte-identical to the sequential
-  reference-semantics simulator — the same gate the default bloom path
-  passes (``test_crawl_parity.py``);
+* parity: the crawl is byte-identical to the sequential
+  reference-semantics simulator while starting from a deliberately tiny
+  sketch table, so the same run covers the engine's data-sized rebuild
+  (no stash, no false negatives afterwards);
 * purge: ``CrawlEngine.purge_seen`` (the reference's liveness delete,
   ``database.py:125-129,27-37``) removes fingerprints from the sketch
   IN PLACE — no rebuild — and a second run over the same seeds
@@ -18,14 +18,23 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from scrapy_crawler_german_real_estate_sites_spark.operators.cuckoo import (
+    build_cuckoo,
+    n_buckets_for,
+)
 from scrapy_crawler_german_real_estate_sites_spark.plans.crawl import CrawlEngine
+
+
+TINY_BUCKETS = 16  # 64 slots: the tiny tier's seen set outgrows it
 
 
 @pytest.fixture(scope="module")
 def cuckoo_run(spark, fix_tiny):
-    eng = CrawlEngine(spark, fix_tiny, hour=7, track_order=True,
-                      seen_filter="cuckoo")
-    summary = eng.run(max_waves=60)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(CrawlEngine, "_CUCKOO_BUCKETS", TINY_BUCKETS)
+        eng = CrawlEngine(spark, fix_tiny, hour=7, track_order=True)
+        assert eng.cuckoo.n_buckets == TINY_BUCKETS
+        summary = eng.run(max_waves=60)
     return eng, summary
 
 
@@ -41,8 +50,12 @@ def test_cuckoo_crawl_matches_simulator(cuckoo_run, sim_tiny):
         assert eng_per[seed_id] == sim_per[seed_id], seed_id
     assert {r.url for r in eng.seen.select("url").collect()} == sim_tiny.seen
     assert set(eng.logs["dup_skips"]) == set(sim_tiny.dup_skips)
-    # the sketch itself holds every seen URL (no false negatives)
+    # the sketch grew past the tiny table to the data's size, with
+    # nothing spilled to the stash, and holds every seen URL (no false
+    # negatives)
     seen_urls = sorted(sim_tiny.seen)
+    assert eng.cuckoo.n_buckets >= n_buckets_for(len(seen_urls)) > TINY_BUCKETS
+    assert eng.cuckoo.stash == []
     assert eng.cuckoo.contains_series(pd.Series(seen_urls)).all()
 
 
@@ -76,8 +89,7 @@ def test_purge_then_second_run_recrawls(cuckoo_run, spark, fix_tiny):
     # pages dup-check-exempt and drop dups at the item pipeline — the
     # reference's semantics — so "kept is never fetched" would be wrong.)
     def second_run(seen_df, sketch):
-        e = CrawlEngine(spark, fix_tiny, hour=17, track_order=True,
-                        seen_filter="cuckoo")
+        e = CrawlEngine(spark, fix_tiny, hour=17, track_order=True)
         e.seen = seen_df.select(
             "url", "seed_id", F.lit(-1).cast("long").alias("fifo_seq")
         ).localCheckpoint(eager=True)
@@ -93,9 +105,6 @@ def test_purge_then_second_run_recrawls(cuckoo_run, spark, fix_tiny):
     control_seen = spark.createDataFrame(
         [(u, "s") for u in seen_urls], "url string, seed_id string"
     ).withColumn("fifo_seq", F.lit(-1).cast("long"))
-    from scrapy_crawler_german_real_estate_sites_spark.operators.cuckoo import (
-        build_cuckoo,
-    )
     control_sketch = build_cuckoo(
         control_seen.select("url"),
         n_buckets=eng.cuckoo.n_buckets, slots=eng.cuckoo.slots)

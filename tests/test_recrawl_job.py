@@ -9,11 +9,12 @@ import os
 import pytest
 
 
-def _write_fixture(spark, tmp_path):
+def _write_fixture(spark, tmp_path, extra_pages=()):
     """Two hosts x 12 urls: per host 4 HOT (changed 6/8 observations),
     4 WARM (changed 1/8), 4 STATIC (never changed).  Ages chosen so hot
-    and warm are due (priority >= 1) and static is not."""
-    rows, pages = [], []
+    and warm are due (priority >= 1) and static is not.  ``extra_pages``
+    rows are appended to the pages table as they are."""
+    rows, pages = [], list(extra_pages)
     for h in ("a.de", "b.de"):
         for i in range(4):
             u = f"https://{h}/hot/{i}"
@@ -100,3 +101,26 @@ def test_recrawl_job_second_cycle_converges(spark, tmp_path, capsys):
           "--pages-dir", pages_dir, "--out", out2])
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["due"] == 0 and summary["fetched"] == 0
+
+
+def test_recrawl_job_duplicate_page_rows(spark, tmp_path, capsys):
+    """A url stored twice in pages, with the same or a different body, is
+    one capture and one next-cycle stats row, advanced once."""
+    from jobs.recrawl_job import main
+
+    dups = [("https://a.de/hot/0", "<html>hot a.de 0 NEW</html>"),
+            ("https://a.de/warm/0", "<html>warm a.de 0 v2</html>")]
+    stats_p, pages_dir = _write_fixture(spark, tmp_path, extra_pages=dups)
+    out = str(tmp_path / "out")
+    main(["--stats", stats_p, "--pages-dir", pages_dir, "--out", out,
+          "--iter-seconds", "10", "--max-waves", "12"])
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["fetched"] == 16
+
+    caps = spark.read.parquet(os.path.join(out, "captures")).collect()
+    assert len(caps) == len({r.url for r in caps}) == 16
+    nxt = spark.read.parquet(os.path.join(out, "stats_next")).collect()
+    assert len(nxt) == len({r.url for r in nxt}) == 24
+    for r in nxt:
+        if r.url in {u for u, _ in dups}:
+            assert r.n_obs == 9.0 and r.age_s == 0.0

@@ -175,6 +175,47 @@ def test_rfc_rule_matching_wildcards_and_precedence(spark):
     assert {r.url for r in allowed.collect()} == set(cases) - want_blocked
 
 
+def test_rfc_precedence_counts_octets_not_characters(spark):
+    """RFC 9309 §2.2.2 compares rule lengths in OCTETS, and 'ä' is one
+    character but two UTF-8 octets.  Each case below flips when lengths
+    are counted in characters, in both engines' rule matchers."""
+    import duckdb
+
+    from scrapy_crawler_german_real_estate_sites_spark.operators.politeness import (
+        robots_filter_rfc,
+        sql_best_match_len,
+    )
+
+    dis, alw = ["/häuser/", "/x*zzz"], ["/*user/x", "/xää"]
+    cases = {
+        # Disallow '/häuser/' 9 octets (8 chars) beats Allow '/*user/x' 8
+        "https://h.de/häuser/x": True,
+        # Disallow '/x*zzz' 6 octets ties Allow '/xää' 6 (4 chars): Allow
+        "https://h.de/xääzzz": False,
+    }
+    robots = spark.createDataFrame(
+        [("h.de", dis, alw)],
+        "netloc string, disallow_prefixes array<string>, "
+        "allow_prefixes array<string>",
+    )
+    links = spark.createDataFrame(
+        [("h.de", u) for u in cases], "netloc string, url string")
+    _, blocked = robots_filter_rfc(links, robots)
+    assert {r.url for r in blocked.collect()} == {
+        u for u, b in cases.items() if b}
+
+    def sql_list(rules):
+        return "[" + ", ".join(f"'{r}'" for r in rules) + "]"
+
+    for url, want in cases.items():
+        path = f"regexp_replace('{url}', '^https?://[^/]+', '')"
+        got = duckdb.sql(
+            f"SELECT coalesce({sql_best_match_len(sql_list(dis), path)}, -1)"
+            f" > coalesce({sql_best_match_len(sql_list(alw), path)}, -1)"
+        ).fetchone()[0]
+        assert got == want, url
+
+
 def test_rfc_matching_from_parsed_robots(spark):
     """parse_robots output plugs straight into robots_filter_rfc."""
     from scrapy_crawler_german_real_estate_sites_spark.operators.politeness import (

@@ -90,7 +90,10 @@ def _cache_status(spark):
 def run_child(cpus: int) -> None:
     import __spark_entry__ as E
     from scrapy_crawler_german_real_estate_sites_spark.plans.crawl import CrawlEngine
-    from scrapy_crawler_german_real_estate_sites_spark.sources.tables import get_spark
+    from scrapy_crawler_german_real_estate_sites_spark.sources.tables import (
+        driver_mem,
+        get_spark,
+    )
 
     fix = E._fixture(SF_DIR)
     # 4 tasks/core: python-heavy post-shuffle stages (pipeline pass, parse)
@@ -132,7 +135,7 @@ def run_child(cpus: int) -> None:
         "gc_sec": round(gc_ms / 1000.0, 1),
         "cache_mem_gb": round(cache_mem / 2**30, 2),
         "cache_disk_gb": round(cache_disk / 2**30, 2),
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "56g"),
+        "driver_mem": driver_mem(),
     }))
 
 
