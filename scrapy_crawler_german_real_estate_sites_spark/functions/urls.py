@@ -109,6 +109,12 @@ _UNRESERVED = (
 )
 
 
+# a '%' that does not start a triplet (end of string, or a non-hex digit
+# within the next two characters): RE2 has no lookahead, so the pattern
+# spells out both short forms
+_MALFORMED_PCT = "%[0-9A-Fa-f]?([^0-9A-Fa-f]|$)"
+
+
 def normalize_percent_encoding(col: Column) -> Column:
     """§6.2.2.1: uppercase the hex digits of every percent-triplet
     (``%3a`` → ``%3A``) — 12 per-digit regex passes (regex cannot
@@ -116,7 +122,10 @@ def normalize_percent_encoding(col: Column) -> Column:
     per position); then §6.2.2.2: decode the 66 unreserved octets
     (``%41`` → ``A``) as literal replaces.  ``%25`` (the escaped ``%``)
     is reserved and stays encoded, so decoding cannot create new
-    triplets.  Pure Catalyst expressions, DuckDB-mirrored below."""
+    triplets.  Only a valid triplet stream is normalized: a URL with a
+    ``%`` that starts no triplet (``/50%off/%41``) is malformed, any of
+    its ``%`` may be literal, and it is returned unchanged.  Pure Catalyst
+    expressions, DuckDB-mirrored below."""
     x = col
     for c in _HEX_LC:
         x = F.regexp_replace(x, f"%{c}([0-9a-fA-F])", f"%{c.upper()}$1")
@@ -124,7 +133,7 @@ def normalize_percent_encoding(col: Column) -> Column:
         x = F.regexp_replace(x, f"%([0-9A-F]){c}", "%$1" + c.upper())
     for code, ch in _UNRESERVED.items():
         x = F.replace(x, F.lit(code), F.lit(ch))
-    return x
+    return F.when(col.rlike(_MALFORMED_PCT), col).otherwise(x)
 
 
 def sql_normalize_percent_encoding(expr: str) -> str:
@@ -137,4 +146,5 @@ def sql_normalize_percent_encoding(expr: str) -> str:
     for code, ch in _UNRESERVED.items():
         lit = ch.replace("'", "''")
         x = f"replace({x}, '{code}', '{lit}')"
-    return x
+    return (f"CASE WHEN regexp_matches({expr}, '{_MALFORMED_PCT}') "
+            f"THEN {expr} ELSE {x} END")

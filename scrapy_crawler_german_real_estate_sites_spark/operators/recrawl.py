@@ -29,20 +29,34 @@ budget by how often each page actually changes.  The standard machinery:
   ``rank_mass``).
 
 All expression-only (whole-stage codegen, DuckDB-mirrorable — query
-``recrawl_schedule``); outputs rounded like the engine's other
-float-emitting oracles (unigram_nll precedent)."""
+``recrawl_schedule``).  The two engines emit bit-identical values: λ̂ is
+the only value computed through ``ln``, which Spark (Java) and DuckDB (C)
+may return a few ULPs apart, and it is rounded to ``LAMBDA_DP`` decimals,
+which absorbs that difference.  Every later column is derived from the
+rounded λ̂ by division, min/max and comparison only, which IEEE 754 makes
+exact in both engines, and is not rounded again: a decimal rounding of an
+exact quotient (``age_s / 2592000`` for ``age_s = 162162`` is 0.0625625)
+can land on a tie, which Spark (half-up on the shortest decimal) and
+DuckDB (``round(x * 10^d) / 10^d``) break differently."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# decimals of the emitted λ̂ (per second).  Rates of interest run from
+# ~4e-7/s (monthly) up; at a weekly rate an interval derived from a λ̂
+# rounded to 14 decimals would already move by ~2 ms, at 15 by ~0.2 ms
+LAMBDA_DP = 15
+
 
 def change_rate(n_obs: Column, n_changes: Column, span_s: Column) -> Column:
     """λ̂ per second (Cho–GM bias-corrected MLE; 0 when nothing ever
-    changed, well-defined at X = n via the continuity correction)."""
+    changed, well-defined at X = n via the continuity correction).
+    Written as ``ln(b/a)``, not ``−ln(a/b)``, so that X = 0 gives +0.0 and
+    not −0.0."""
     return (
-        -F.log((n_obs - n_changes + F.lit(0.5)) / (n_obs + F.lit(0.5)))
+        F.log((n_obs + F.lit(0.5)) / (n_obs - n_changes + F.lit(0.5)))
         * n_obs / span_s
     )
 
@@ -56,10 +70,13 @@ def recrawl_schedule(
     """(url, n_obs, n_changes, span_s, age_s) → (url, lambda_hat,
     interval_s, priority, due).
 
-    ``interval_s`` = clamp(1/λ̂, band); pages with λ̂ = 0 (never seen to
-    change) sit at the band maximum.  ``priority`` = age_s/interval_s;
-    ``due`` = priority ≥ 1."""
-    lam = change_rate(F.col("n_obs"), F.col("n_changes"), F.col("span_s"))
+    ``lambda_hat`` is λ̂ rounded to ``LAMBDA_DP`` decimals, and the rest
+    derive from it: ``interval_s`` = clamp(1/λ̂, band); pages with λ̂ = 0
+    (never seen to change) sit at the band maximum.  ``priority`` =
+    age_s/interval_s; ``due`` = priority ≥ 1."""
+    lam = F.round(
+        change_rate(F.col("n_obs"), F.col("n_changes"), F.col("span_s")),
+        LAMBDA_DP)
     interval = F.when(
         lam <= 0, F.lit(float(max_interval_s))
     ).otherwise(
@@ -71,9 +88,9 @@ def recrawl_schedule(
     prio = F.col("age_s") / interval
     return stats.select(
         F.col(url_col).alias("url"),
-        F.round(lam, 9).alias("lambda_hat"),
-        F.round(interval, 3).alias("interval_s"),
-        F.round(prio, 6).alias("priority"),
+        lam.alias("lambda_hat"),
+        interval.alias("interval_s"),
+        prio.alias("priority"),
         (prio >= 1.0).alias("due"),
     )
 
@@ -82,7 +99,8 @@ def sql_recrawl_schedule(src: str, min_interval_s: float = 3600.0,
                          max_interval_s: float = 30 * 86400.0) -> str:
     """DuckDB mirror of :func:`recrawl_schedule` over relation ``src``
     providing (url, n_obs, n_changes, span_s, age_s)."""
-    lam = "(-ln((n_obs - n_changes + 0.5)/(n_obs + 0.5)) * n_obs / span_s)"
+    lam = ("round(ln((n_obs + 0.5)/(n_obs - n_changes + 0.5)) * n_obs / span_s,"
+           f" {LAMBDA_DP})")
     interval = (
         f"CASE WHEN {lam} <= 0 THEN {max_interval_s!r}::DOUBLE "
         f"ELSE least({max_interval_s!r}::DOUBLE, "
@@ -90,9 +108,9 @@ def sql_recrawl_schedule(src: str, min_interval_s: float = 3600.0,
     )
     return f"""
 SELECT url,
-       round({lam}, 9) AS lambda_hat,
-       round({interval}, 3) AS interval_s,
-       round(age_s / ({interval}), 6) AS priority,
+       {lam} AS lambda_hat,
+       {interval} AS interval_s,
+       age_s / ({interval}) AS priority,
        (age_s / ({interval})) >= 1.0 AS due
 FROM {src}
 """

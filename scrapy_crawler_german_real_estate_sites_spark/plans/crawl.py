@@ -16,10 +16,17 @@ that caps scaling):
                  tag_batch marks the NEXT wave's politeness batch ('sel'
                  column) → checkpoint
 
-These are not the wave's only Spark jobs: the batch and new-link counts,
-broadcast builds and adaptive-execution stage jobs come on top, and the
-traced drain benchmark (``perfbench/run.py --trace 1``) counts about 30
-jobs per wave.
+These are not the wave's only Spark jobs: broadcast builds and
+adaptive-execution stage jobs come on top, and the traced drain benchmark
+(``perfbench/run.py --trace 1``) counts about 30 jobs per wave.  The
+frontier checkpoint lands in the same job that counts the next wave's batch
+and this wave's new links.
+
+A wave's Python stages are sized from its batch (``wave_width``): below
+4,096 URLs the cached pages are coalesced to one parse task per 256 URLs,
+link extraction runs on the parse partitions, and the pipeline pass runs
+no more tasks than the parse, so a small politeness-bounded wave does not
+pay a Python task per core.
 
 The wave-start "select" is a filter over the frontier checkpoint from the
 previous wave — politeness.tag_batch fuses batch selection and the
@@ -49,6 +56,7 @@ import base64
 import datetime
 import json
 import os
+import re
 import time
 from typing import Iterator
 
@@ -108,8 +116,25 @@ def _netloc(col):
     return F.regexp_extract(col, _NETLOC, 1)
 
 
+# A wave's Python stages (parse, link extraction + seen flag, pipeline
+# pass) pay a fixed per-task cost of about 75 ms on a 4-core host, about
+# the portal kernel's work on 256 URLs (~290 us/URL).  Below 4,096 URLs a
+# wave therefore runs one such task per 256 URLs; from 4,096 URLs on it
+# plans at the full 4 tasks/core, which levels stragglers (the per-page
+# parse cost varies 10x).
+_URLS_PER_TASK = 256
+_FULL_WIDTH_URLS = 4096
+
+
+def wave_width(n_batch: int, cores: int) -> int:
+    """Python tasks for the parse stage of a wave of ``n_batch`` URLs."""
+    if n_batch >= _FULL_WIDTH_URLS:
+        return 4 * cores
+    return max(1, min(-(-n_batch // _URLS_PER_TASK), 4 * cores))
+
+
 def pipeline_pass(parsed: DataFrame, state_snap_bc, stadte_by_id: dict,
-                  run_ts: datetime.datetime) -> DataFrame:
+                  run_ts: datetime.datetime, n_parts: int = None) -> DataFrame:
     """Per-seed sequential pipeline semantics: item budget (P7),
     cumulative-failure spider stop (D3 pipeline variant,
     pipelines.py:363-369), insert/alert effects via the SAME ``apply_item``
@@ -135,7 +160,10 @@ def pipeline_pass(parsed: DataFrame, state_snap_bc, stadte_by_id: dict,
     ``state_snap_bc``: SparkContext.broadcast of
     ``{seed_id: (scraped, stop_condition, spider_stop, budget)}`` for this
     wave — replaces a per-wave createDataFrame + broadcast join (serial
-    driver time) with one small torrent broadcast."""
+    driver time) with one small torrent broadcast.
+
+    ``n_parts``: tasks of the pass, by default 2 per core; the engine
+    passes ``min(2 * cores, wave_width(n_batch, cores))``."""
     from .simulator import apply_item  # shared effect core
 
     def process_seed(pdf: pd.DataFrame, out: list) -> None:
@@ -243,11 +271,13 @@ def pipeline_pass(parsed: DataFrame, state_snap_bc, stadte_by_id: dict,
                 process_seed(g, out)
             yield pd.DataFrame(out)
 
-    # explicit width: 2 tasks/core levels pipeline stragglers, while the
-    # checkpointed output stays narrow enough that the downstream
-    # maintenance jobs (state collect, dedup anti-join, frontier window)
-    # don't inherit the parse phase's 4x-core task fan-out
-    n_parts = 2 * parsed.sparkSession.sparkContext.defaultParallelism
+    # explicit width: at most 2 tasks/core levels pipeline stragglers,
+    # while the checkpointed output stays narrow enough that the
+    # downstream maintenance jobs (state collect, dedup anti-join,
+    # frontier window) don't inherit the parse phase's 4x-core task
+    # fan-out; a small wave needs no more tasks than its parse stage
+    if n_parts is None:
+        n_parts = 2 * parsed.sparkSession.sparkContext.defaultParallelism
     return (
         parsed.select(
             "seed_id", "fifo_seq", "url", "kind", "partition_id",
@@ -468,8 +498,11 @@ class CrawlEngine:
         # city-clustered and coarse (~19 splits at sf0.1), so a wave's
         # matched pages skew across tasks and the last task straggles the
         # whole parse stage (~25% of stage time measured at local[8]).
-        # uniform url-hash partitions sized ~4 tasks/core fix both; at
-        # cluster scale this is the Iceberg url-bucketed layout.
+        # uniform url-hash partitions, 4 per core (at least 16), fix both;
+        # at cluster scale this is the Iceberg url-bucketed layout.  A
+        # wave of 4,096 URLs or more parses one task per cache partition;
+        # a smaller wave coalesces them to ``wave_width(n_batch)`` tasks
+        # (see ``_run_wave_inner``).
         #
         # BUT block-manager storage must not crowd the unified memory
         # pool: storage beyond ~half the pool starves the concurrent
@@ -510,7 +543,10 @@ class CrawlEngine:
             self.pages = tables.load_pages(spark, fix_dir).select("url", "html")
         seeds = tables.load_seeds(spark, fix_dir)
         stadte = tables.load_stadte(spark, fix_dir)
-        self.robots = tables.load_robots(spark, fix_dir)
+        # every wave broadcasts robots twice (tag_batch, robots_filter):
+        # read the table once, not two parquet scans per wave
+        self.robots = tables.load_robots(spark, fix_dir).localCheckpoint(
+            eager=True)
 
         # per-seed parse context, shipped to workers ONCE as a python
         # broadcast (a per-wave seed_ctx broadcast-join costs serial driver
@@ -572,13 +608,10 @@ class CrawlEngine:
         # frontier — wave start reads sel=true, wave end unions sel=false
         # with the new links; no separate select job, no remove-fetched
         # anti-join.
-        pending0 = self.spark.createDataFrame(
+        pending0 = self._local_df(
             [
-                (
-                    r.seed_id, 0, r.url, "start",
-                    __import__("re").match(_NETLOC, r.url).group(1),
-                    json.dumps({}), 0, 0,
-                )
+                (r.seed_id, 0, r.url, "start", re.match(_NETLOC, r.url).group(1),
+                 json.dumps({}), 0, 0)
                 for r in self._seeds_local
             ],
             PENDING_SCHEMA,
@@ -588,13 +621,15 @@ class CrawlEngine:
         # no per-wave re-group of the whole set is needed.  Wave increments
         # union in lazily (their lineage roots in the wave's checkpointed
         # pass output) and the union is folded to a localCheckpoint every
-        # _SEEN_FOLD waves to bound plan depth.
-        self.seen = self.spark.createDataFrame([], SEEN_SCHEMA)
+        # _SEEN_FOLD waves to bound plan depth.  The empty start has no
+        # partitions, so the unfolded union's jobs get no task from it.
+        self.seen = self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), SEEN_SCHEMA)
         self._seen_unfolded = 0
         # the deletable URL-seen sketch (advisory: the anti-join against
         # ``seen`` is the truth); at 10^10 URLs one shard per netloc bucket
         self.cuckoo = cuckoo_ops.CuckooFilter(self._CUCKOO_BUCKETS)
-        self.tagged = self._tag(pending0, 0).localCheckpoint(eager=True)
+        self._land_frontier(self._tag(pending0, 0), 0)
         self.logs = {k: [] for k in ("fetch", "dup_skips")}
         self._trash = []
         self.out_batches = {"items": [], "docs": [], "alerts": []}
@@ -602,12 +637,33 @@ class CrawlEngine:
         self.iteration = 0
 
     # ---------------------------------------------------------------
+    def _local_df(self, rows: list, schema: T.StructType) -> DataFrame:
+        """A driver-built frame that crosses to the JVM through Arrow, as a
+        local table scan: unlike ``createDataFrame`` of a Python list, no
+        job over Python workers computes it when a join broadcasts it.
+        (Empty ``rows`` take the Python-list path.)"""
+        return self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=schema.names), schema)
+
+    def _land_frontier(self, tagged: DataFrame, depth: int) -> int:
+        """Make ``tagged`` the frontier.  One job materializes its
+        checkpoint and counts both the next wave's batch (kept for
+        ``run_wave``) and the rows at ``depth``, which it returns."""
+        self.tagged = tagged.localCheckpoint(eager=False)
+        n_sel, n_depth = self.tagged.agg(
+            F.count(F.when(F.col("sel"), 1)),
+            F.count(F.when(F.col("depth") == depth, 1)),
+        ).first()
+        self._n_batch = n_sel
+        return n_depth
+
     def _tag(self, pending_df: DataFrame, iter_no: int) -> DataFrame:
         delays = None
         if self.autothrottle and self.at_delays:
-            delays = self.spark.createDataFrame(
+            delays = self._local_df(
                 sorted((k, float(v)) for k, v in self.at_delays.items()),
-                "netloc string, delay_s double",
+                T.StructType([T.StructField("netloc", T.StringType()),
+                              T.StructField("delay_s", T.DoubleType())]),
             )
         order_cols = None
         if self._rank_df is not None:
@@ -650,7 +706,7 @@ class CrawlEngine:
             )
             for sid, s in self.state.items()
         ]
-        return self.spark.createDataFrame(rows, STATE_SCHEMA)
+        return self._local_df(rows, STATE_SCHEMA)
 
     def _entry_shards(self, urls: DataFrame) -> DataFrame:
         """Cuckoo entry shards of url-disjoint ``urls`` as ``rec='ckf'``
@@ -706,7 +762,7 @@ class CrawlEngine:
         run_wave() again; ``run()`` terminates on the first empty wave.
 
         Restores the caller's ``spark.sql.shuffle.partitions`` on exit —
-        the per-phase overrides (4x cores for the python-heavy parse, 1x
+        the per-phase overrides (4x cores for the python-heavy phase, 1x
         for small frontier jobs) are scoped to the wave's own jobs.
         """
         orig_shuffle = self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -728,13 +784,13 @@ class CrawlEngine:
             _last[0] = now
 
         it = self.iteration
-        # the batch was tagged (and checkpointed) at the END of the previous
-        # wave — selecting it is a filter over cached blocks, not a job over
-        # the politeness windows
+        # the batch was tagged, checkpointed and counted at the END of the
+        # previous wave — selecting it is a filter over cached blocks, not
+        # a job over the politeness windows
         batch = self.tagged.where(F.col("sel")).select(
             "seed_id", "fifo_seq", "url", "kind", "netloc", "meta", "depth"
         )
-        n_batch = batch.count()
+        n_batch = self._n_batch
         _mark('select')
         if n_batch == 0:
             return {"iteration": it, "fetched": 0, "wall_ms": 0}
@@ -746,26 +802,32 @@ class CrawlEngine:
             }
         )
 
-        # per-phase shuffle sizing: the python-heavy parse/pipeline job
-        # wants ~4 tasks/core (straggler leveling — the per-page parse cost
-        # varies 10x), but at 4x-core width the wave's SMALL jobs (state
-        # collect, frontier maintenance) pay 4x the task-launch + python
-        # round-trip overhead for KB-sized shuffles: measured 9.3s -> 3.9s
-        # per wave at local[32], same data, by planning them at 1x cores.
-        # (Byte-based AQE coalescing can't express this: it would collapse
-        # the python-heavy stages to single partitions.)
+        # per-phase sizing: the python-heavy stages (parse, links + seen
+        # flag, pipeline pass) are sized from the batch by ``wave_width``.
+        # The wave's SMALL jobs (state collect, frontier maintenance) plan
+        # at 1x cores: at 4x they paid 4x the task-launch + python
+        # round-trip overhead for KB-sized shuffles (measured 9.3s -> 3.9s
+        # per wave at local[32], same data).  (Byte-based AQE coalescing
+        # can't express this: it would collapse the python-heavy stages to
+        # single partitions.)
         cores = self.spark.sparkContext.defaultParallelism
+        width = wave_width(n_batch, cores)
         self.spark.conf.set("spark.sql.shuffle.partitions", str(4 * cores))
 
         fetched = self.pages.join(F.broadcast(batch), "url", "inner")
-        # parse directly on the scan splits: the cached pages fan out
-        # across all cores, and the html bytes are never shuffled — only
-        # the state machine's inputs (fields + item json, the smallest
-        # slice of the parse output) move in the groupBy(seed) exchange
-        # feeding the pipeline pass.  At cluster scale this is the
-        # Iceberg-bucketed pages scan with the wave batch broadcast to it.  Seed ctx and wave state ride as python
-        # broadcasts, not joins: the only per-wave broadcast BUILD is the
-        # wave batch itself.
+        if self.pages_cached and n_batch < _FULL_WIDTH_URLS:
+            # narrow: each parse task reads several cache partitions, no
+            # shuffle, no html movement.  Uncached pages keep their scan
+            # splits: coalescing those would read the table in few tasks.
+            fetched = fetched.coalesce(width)
+        # parse directly on the scan splits (coalesced for a small wave):
+        # the html bytes are never shuffled — only the state machine's
+        # inputs (fields + item json, the smallest slice of the parse
+        # output) move in the groupBy(seed) exchange feeding the pipeline
+        # pass.  At cluster scale this is the Iceberg-bucketed pages scan
+        # with the wave batch broadcast to it.  Seed ctx and wave state
+        # ride as python broadcasts, not joins: the only per-wave
+        # broadcast BUILD is the wave batch itself.
         # non-eager localCheckpoint: the pipeline checkpoint below is the
         # first job over the parse output, so parsing happens ONCE and its
         # blocks serve both consumers — the per-seed pipeline exchange
@@ -792,7 +854,8 @@ class CrawlEngine:
                 resp, self.at_delays
             )
         passed = pipeline_pass(
-            parsed, state_snap_bc, self._stadte_by_id, self.run_ts
+            parsed, state_snap_bc, self._stadte_by_id, self.run_ts,
+            n_parts=min(2 * cores, width),
         ).localCheckpoint(eager=True)
         state_snap_bc.unpersist(blocking=False)
         # small-job phase: state aggregates + frontier maintenance.  Width
@@ -802,8 +865,9 @@ class CrawlEngine:
         # at local[32] the frontier/state/seen stages cost 57/23/13s at 32
         # partitions vs 28/10/2s at 8 (same data).  On a real cluster the
         # equivalent is sizing maintenance-stage partitions by bytes (AQE
-        # advisory size), not by fleet width; the parse stage above stays
-        # core-sized because its cost is per-row python, not per-task.
+        # advisory size), not by fleet width; the parse stage above is
+        # sized from the batch (``wave_width``) because its cost is per-row
+        # python once a wave is large.
         self.spark.conf.set(
             "spark.sql.shuffle.partitions", str(min(cores, 8))
         )
@@ -986,16 +1050,15 @@ class CrawlEngine:
         nxt = self.tagged.where(~F.col("sel")).drop("sel").unionByName(
             new_pending
         )
+        # n_new_links counts post-stopped-drop rows (diagnostics), in the
+        # same job that lands the checkpoint and counts the next batch
         old_tagged = self.tagged
-        self.tagged = self._tag(nxt, it + 1).localCheckpoint(eager=True)
+        n_new_links = self._land_frontier(self._tag(nxt, it + 1), it + 1)
         self._unpersist_later(old_tagged)
         # the parse-output blocks are fully consumed once the frontier
         # checkpoint lands (pipeline checkpoint + links append both done);
         # unlike ``passed`` nothing later roots in them
         self._unpersist_later(parsed)
-        # n_new_links counts post-stopped-drop rows (diagnostics) — a
-        # metadata-cheap filter over the fresh checkpoint's blocks
-        n_new_links = self.tagged.where(F.col("depth") == it + 1).count()
         _mark('frontier')
 
         # --- item outputs.  Small tiers: batches stay lazy (they root in
@@ -1097,6 +1160,7 @@ class CrawlEngine:
             log.warning("close(): ctx broadcast unpersist failed: %s", e)
         self.tagged = None
         self.seen = None
+        self.robots = None
         self._trash.clear()
         self.out_batches = {"items": [], "docs": [], "alerts": []}
         if self._spill_dir:
@@ -1158,10 +1222,10 @@ class CrawlEngine:
         self.state = snap["state"]
         self.iteration = snap["iteration"]
         pending = read_state(self.spark, os.path.join(ckpt_dir, "pending"))
-        self.tagged = self._tag(
+        self._land_frontier(self._tag(
             pending.select([f.name for f in PENDING_SCHEMA.fields]),
             self.iteration,
-        ).localCheckpoint(eager=True)
+        ), self.iteration)
         # distributed sketch rebuild from compact entry shards — NOT a
         # collect of every seen URL, which is O(inserted URLs) driver
         # memory/time and cannot work at the 10^10-URL north-star scale

@@ -84,3 +84,44 @@ def test_priority_feeds_crawl_engine(spark, fix_tiny):
     eng = CrawlEngine(spark, fix_tiny, hour=7, priority_ranks=ranks)
     assert eng._rank_df is not None
     eng.close()
+
+
+def test_schedule_matches_duckdb_bit_for_bit(spark):
+    """Spark and the DuckDB mirror emit the same doubles, bit for bit (sign
+    of zero included), on rows that used to split them: never-changed rows
+    (λ̂ = 0), a priority on a 6-decimal tie (162162 / 2592000 = 0.0625625),
+    and ages exactly on, and one ULP under, the due boundary."""
+    import duckdb
+    import pandas as pd
+
+    from scrapy_crawler_german_real_estate_sites_spark.operators.recrawl import (
+        sql_recrawl_schedule,
+    )
+
+    span = 30 * 86400.0
+    rows = [(f"u{x}", 8.0, float(x), span, 86400.0) for x in range(9)]
+    rows += [
+        ("tie", 8.0, 0.0, span, 162162.0),
+        ("max_due", 8.0, 0.0, span, MAX_I),
+        ("min_due", 8.0, 8.0, 3600.0, MIN_I),
+    ]
+    # an age equal to a derived (unclamped) interval: priority exactly 1
+    iv = _run(spark, [("mid", 8.0, 4.0, span, 0.0)])["mid"].interval_s
+    rows += [("mid_due", 8.0, 4.0, span, iv),
+             ("mid_fresh", 8.0, 4.0, span, math.nextafter(iv, 0.0))]
+
+    def bits(r):
+        return (r[0], *(float(v).hex() for v in r[1:4]), bool(r[4]))
+
+    got = sorted(bits(tuple(r)) for r in _run(spark, rows).values())
+    con = duckdb.connect()
+    con.register("stats", pd.DataFrame(
+        rows, columns=["url", "n_obs", "n_changes", "span_s", "age_s"]))
+    want = sorted(bits(r) for r in con.execute(
+        sql_recrawl_schedule("stats")).fetchall())
+    assert got == want
+    by_url = {r[0]: r for r in got}
+    assert by_url["u0"][1] == (0.0).hex()
+    assert by_url["tie"][3] == (162162.0 / MAX_I).hex()
+    assert by_url["max_due"][4] and by_url["min_due"][4]
+    assert by_url["mid_due"][4] and not by_url["mid_fresh"][4]

@@ -119,3 +119,39 @@ def test_percent_normalization_matches_duckdb(spark):
     want = [con.execute(f"SELECT {expr} FROM (SELECT ? AS u)", [u])
             .fetchone()[0] for u in urls]
     assert got == want
+
+
+# a '%' that starts no triplet makes the URL malformed: any of its '%' may
+# be literal, so neither engine rewrites it (a literal %41 stays %41)
+PCT_MALFORMED = [
+    "https://h.de/50%off/%41",
+    "https://h.de/a%4",
+    "https://h.de/a%",
+    "https://h.de/%zz%61",
+    "https://h.de/%%41",
+    "https://h.de/%4g%2f",
+]
+
+
+def test_percent_normalization_leaves_malformed_urls_unchanged(spark):
+    import duckdb
+
+    from scrapy_crawler_german_real_estate_sites_spark.functions.urls import (
+        normalize_percent_encoding,
+        sql_normalize_percent_encoding,
+    )
+
+    # the same kind of URL with a valid triplet stream is still normalized
+    cases = [(u, u) for u in PCT_MALFORMED] + [
+        ("https://h.de/50%25off/%41", "https://h.de/50%25off/A"),
+        (None, None),
+    ]
+    df = spark.createDataFrame([(u,) for u, _ in cases], "u string")
+    got = [r.c for r in df.select(
+        normalize_percent_encoding(df.u).alias("c")).collect()]
+    assert got == [want for _, want in cases]
+    con = duckdb.connect()
+    expr = sql_normalize_percent_encoding("u")
+    duck = [con.execute(f"SELECT {expr} FROM (SELECT ?::VARCHAR AS u)", [u])
+            .fetchone()[0] for u, _ in cases]
+    assert duck == got
